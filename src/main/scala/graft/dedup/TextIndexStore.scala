@@ -389,6 +389,13 @@ object TextIndexStore {
     require(postT.properties.get("indexFormat").contains(Format),
       s"$root was built by an incompatible text-index format — rebuild")
     repair(spark, root)
+    // a replayed txn-stamped sync whose admission is already durable is a
+    // full no-op, decided BEFORE the evict: the evict would remove the
+    // changed docs and admitImpl's txn guard would then decline to
+    // re-admit them. The cursor stays put (the head may have moved since
+    // the first run); the next sync re-covers the range exactly.
+    if (txn.exists { case (app, v) => postT.lastTxn(app).exists(_ >= v) })
+      return (0L, 0L)
     val head = table.resolve()
     val from = postT.properties.get("syncedVersion").map(_.toLong)
       .getOrElse(throw new IllegalStateException(

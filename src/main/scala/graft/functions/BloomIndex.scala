@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-group Bloom filter construction as a `TypedImperativeAggregate` —
@@ -73,41 +71,4 @@ case class BloomBuildAgg(
       newChildren: IndexedSeq[Expression]): BloomBuildAgg =
     copy(child = newChildren.head)
   override def prettyName: String = "bloom_build_agg"
-}
-
-/** Probe side of the per-file Bloom index: TRUE iff ANY of `keys` (an
-  * array of pre-hashed longs) might be in the serialized filter `bloom`.
-  * Unlike Spark's `BloomFilterMightContain` — which requires a CONSTANT
-  * filter it can deserialize once per task — the filter here is a per-row
-  * COLUMN (each row is one file's index entry), so the bytes deserialize
-  * per row; the evaluated frame is a pruned candidate-file list, never
-  * table data, and the key loop short-circuits on the first hit. */
-case class BloomAnyContain(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"bloom_any_contain requires (binary, array<bigint>), got $other")
-    }
-
-  override def nullSafeEval(bloom: Any, keys: Any): Any = {
-    val bf = BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bloom.asInstanceOf[Array[Byte]]))
-    val arr = keys.asInstanceOf[ArrayData]
-    var i = 0
-    while (i < arr.numElements()) {
-      if (!arr.isNullAt(i) && bf.mightContainLong(arr.getLong(i))) return true
-      i += 1
-    }
-    false
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomAnyContain =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "bloom_any_contain"
 }

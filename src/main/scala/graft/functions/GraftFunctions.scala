@@ -67,11 +67,6 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"bloom_build_agg expects (bigint, expectedItems, fpp), got ${other.size} args")
     }),
-    ("bloom_any_contain", classOf[BloomAnyContain], (exprs: Seq[Expression]) => exprs match {
-      case Seq(bloom, keys) => BloomAnyContain(bloom, keys)
-      case other => throw new IllegalArgumentException(
-        s"bloom_any_contain expects (binary, array<bigint>), got ${other.size} args")
-    }),
     ("vec_dot", classOf[DotProduct], (exprs: Seq[Expression]) => exprs match {
       case Seq(a, b) => DotProduct(a, b)
       case other => throw new IllegalArgumentException(

@@ -3,9 +3,11 @@ package graft.table
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.sketch.BloomFilter
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Minimal versioned-parquet table format: snapshot isolation via per-version
   * manifest files over immutable parquet data files.
@@ -350,11 +352,7 @@ final class VersionedTable(val root: String,
     node.has("files")
 
   private def manifestFpOpt(v: Long): Option[VersionedTable.ManifestFp] =
-    try {
-      val a = Files.readAttributes(manifestPath(v),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      Some(VersionedTable.ManifestFp(a.size(), a.lastModifiedTime(), a.fileKey()))
-    } catch { case _: java.io.IOException => None }
+    VersionedTable.fingerprint(manifestPath(v))
 
   private def parseFileStats(node: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, (String, String, String)] =
@@ -1505,8 +1503,21 @@ final class VersionedTable(val root: String,
     val cols = bloomIndexColumns.flatMap(c => columnFor(c).map(c -> _))
     if (cols.isEmpty) return
     graft.functions.GraftFunctions.registerAll(spark)
-    val items = properties.get("bloomIndexExpectedItems").map(_.toLong).getOrElse(100000L)
-    val fpp = properties.get("bloomIndexFpp").map(_.toDouble).getOrElse(0.01)
+    // Sizing: an explicit `bloomIndexExpectedItems` wins (at `bloomIndexFpp`,
+    // default 0.01). Otherwise every filter of the commit is sized for the
+    // row count of its largest file (the footers the writer just produced:
+    // rows bound the distinct values from above), at `bloomIndexFpp`,
+    // default DerivedBloomFpp — see there for why it is tighter.
+    val (items, fpp) = properties.get("bloomIndexExpectedItems") match {
+      case Some(n) =>
+        (n.toLong, properties.get("bloomIndexFpp").map(_.toDouble).getOrElse(0.01))
+      case None =>
+        val rootAbs = Paths.get(root).toAbsolutePath.toString
+        (math.max(1L, VersionedTable.metadataMap(spark, files)(
+            f => VersionedTable.footerRows(rootAbs, f)).max),
+          properties.get("bloomIndexFpp").map(_.toDouble)
+            .getOrElse(VersionedTable.DerivedBloomFpp))
+    }
     // pre-hash under index-based aliases (dotted names don't ride SQL text)
     val hashed = written.select(input_file_name().as("__f") +:
       cols.zipWithIndex.map { case ((_, cx), i) => xxhash64(cx).as(s"__h_$i") }: _*)
@@ -1527,49 +1538,102 @@ final class VersionedTable(val root: String,
       .write.mode("overwrite").parquet(bloomSidecarPath(commitId).toString)
   }
 
-  /** Bloom pass over a range-pruned candidate file list: drop every
-    * candidate whose sidecar filter says NONE of `hashedKeys` (a one-column
-    * `__h` BIGINT frame of `xxhash64` key hashes) can be present in
-    * `column`. Files without a sidecar entry (unindexed commits, missing
-    * column) always survive — the index can only prune, never resurrect.
-    * The probe is a distributed join of the candidate list against the
-    * per-commit sidecar datasets with the (batch-bounded) key-hash array
-    * broadcast; only the surviving paths come back to the driver. */
+  /** Bloom pass over a range-pruned candidate file list, run on the
+    * driver: drop every candidate whose filter for `column` says NONE of
+    * the probe's key hashes can be present. `hashes(n)` yields at most `n`
+    * `xxhash64` key hashes; it is asked for one more than the table's
+    * `bloomProbeMaxKeys` cap, and above the cap the pass is skipped. Files
+    * without a filter entry (unindexed commits, missing column, a null
+    * filter) or whose sidecar is missing always survive — the index can
+    * only prune, never resurrect. Filters come from the driver cache of
+    * decoded sidecars ([[bloomSidecarsOf]]), so a warm probe reads no file
+    * and runs no Spark job. */
   private def bloomPruneCandidates(spark: SparkSession, candidates: Seq[String],
-      column: String, hashedKeys: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.{broadcast, collect_list, expr}
+      column: String, hashes: Int => Seq[Long]): Seq[String] = {
     if (candidates.isEmpty || !bloomIndexColumns.contains(column)) return candidates
-    val cids = candidates.flatMap(_.split('/') match {
-      case Array("data", cid, _*) => Some(cid)
-      case _ => None
-    }).distinct
-    val sidecars = cids.map(bloomSidecarPath).filter(Files.isDirectory(_))
-    if (sidecars.isEmpty) return candidates
-    import spark.implicits._
-    graft.functions.GraftFunctions.registerAll(spark)
-    // merge sources are UNBOUNDED: collecting every key hash into one driver
-    // array (broadcast into every task) is only sane for batch-sized key
-    // sets — a 100 M-key merge would materialize ~800 MB on the driver and
-    // per task. Collect at most cap+1 hashes in one bounded pass; above the
-    // cap the Bloom pass is skipped outright (range + checkpoint pruning
-    // still bound the candidates), mirroring how Delta caps its
-    // file-skipping key collection. Callers pass deduplicated key frames,
-    // so the raw count is the distinct count. Tunable per table
+    val cids = candidates.flatMap(commitIdOf).distinct
+    if (!cids.exists(c => Files.isDirectory(bloomSidecarPath(c)))) return candidates
+    // merge sources are UNBOUNDED: holding every key hash on the driver is
+    // only sane for batch-sized key sets, so at most cap+1 hashes are
+    // produced and above the cap the Bloom pass is skipped outright (range
+    // + checkpoint pruning still bound the candidates), mirroring how Delta
+    // caps its file-skipping key collection. Tunable per table
     // (`bloomProbeMaxKeys`) for deployments with bigger driver headroom.
     val cap = properties.get("bloomProbeMaxKeys").map(_.toInt)
       .getOrElse(VersionedTable.BloomProbeMaxKeys)
-    val capped = hashedKeys.limit(cap + 1)
-      .agg(collect_list(col("__h")).as("__ks")).head.getSeq[Long](0)
-    if (capped.length > cap) return candidates
-    val keyArr = Seq(Tuple1(capped)).toDF("__ks")
-    val sc = spark.read.parquet(sidecars.map(_.toString): _*)
-      .filter(col("column") === column)
-    candidates.toDF("path")
-      .join(sc, Seq("path"), "left")
-      .crossJoin(broadcast(keyArr))
-      .filter(col("bloom").isNull || expr("bloom_any_contain(bloom, __ks)"))
-      .select("path").as[String].collect().toSeq
+    val ks = hashes(cap + 1)
+    if (ks.length > cap) return candidates
+    val sidecars = bloomSidecarsOf(spark, cids)
+    candidates.filter { f =>
+      commitIdOf(f).flatMap(sidecars.get).flatMap(_.filters.get((f, column))) match {
+        case Some(bf) => ks.exists(bf.mightContainLong)
+        case None => true
+      }
+    }
   }
+
+  /** The commit id a table-relative data file was written under. */
+  private def commitIdOf(file: String): Option[String] = file.split('/') match {
+    case Array("data", cid, _*) => Some(cid)
+    case _ => None
+  }
+
+  /** Decoded Bloom sidecars of `cids` (commits without one are left out):
+    * cache hits are checked against their directory's fingerprint, misses
+    * are read with parquet-mr through [[VersionedTable.metadataMap]] — in a
+    * driver pool, or one Spark job above the footer-stats file bound — and
+    * cached. A sidecar that vanishes mid-read (a concurrent VACUUM) counts
+    * as absent, so its files survive. */
+  private def bloomSidecarsOf(spark: SparkSession, cids: Seq[String])
+      : Map[String, VersionedTable.BloomSidecar] = {
+    val cache = VersionedTable.bloomCache
+    val located = cids.flatMap { c =>
+      val dir = bloomSidecarPath(c).toAbsolutePath.normalize
+      VersionedTable.fingerprint(dir).map(fp => (c, dir, fp))
+    }
+    val (hits, misses) = located.partitionMap { case (c, dir, fp) =>
+      cache.get(dir.toString, fp).map(c -> _).toLeft((c, dir, fp))
+    }
+    val parts = misses.flatMap { case (c, dir, _) =>
+      listNames(dir).filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
+        !n.startsWith(".")).map(n => c -> dir.resolve(n).toString)
+    }
+    val read = VersionedTable.metadataMap(spark, parts.map(_._2))(VersionedTable.readBloomPart)
+    val rowsOf = parts.map(_._1).zip(read).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val loaded = misses.flatMap { case (c, dir, fp) =>
+      val rows = rowsOf.getOrElse(c, Nil)
+      if (rows.contains(None)) None
+      else {
+        val flat = rows.flatten.flatten
+        val sidecar = VersionedTable.BloomSidecar(
+          flat.map { case (path, column, bytes) =>
+            (path, column) -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+          }.toMap,
+          flat.map(_._3.length.toLong).sum)
+        cache.put(dir.toString, fp, sidecar)
+        Some(c -> sidecar)
+      }
+    }
+    hits.toMap ++ loaded
+  }
+
+  /** `xxhash64(CAST(__s AS <dt>))` of literal probe values — the build
+    * side's hash of the typed column value, with Spark's own cast (ANSI
+    * included). The frame is a LocalRelation, so the optimizer evaluates
+    * the projection in place and the collect runs no Spark job. */
+  private def literalHashes(spark: SparkSession,
+      dt: org.apache.spark.sql.types.DataType, vals: Seq[String]): Seq[Long] = {
+    import spark.implicits._
+    vals.toDF("__s")
+      .select(org.apache.spark.sql.functions.expr(s"xxhash64(CAST(__s AS ${dt.sql}))"))
+      .as[Long].collect().toSeq
+  }
+
+  /** Key hashes of a merge source's distinct keys frame (`__h`), at most
+    * `n` of them: one capped Spark collect. */
+  private def frameHashes(hashed: DataFrame)(n: Int): Seq[Long] =
+    hashed.limit(n)
+      .agg(org.apache.spark.sql.functions.collect_list(col("__h"))).head.getSeq[Long](0)
 
   /** Write a deletion-vector batch — (file, row_index) tombstones — as
     * parquet under a fresh `dv/<uuid>` dir; returns table-relative paths.
@@ -1650,41 +1714,20 @@ final class VersionedTable(val root: String,
           }
         }.toMap
       val tz = spark.sessionState.conf.sessionLocalTimeZone
-      val maxDriver = spark.conf.getOption("spark.graft.stats.footerDriverMaxFiles")
-        .map(_.toInt).getOrElse(256)
       val rootAbs = Paths.get(root).toAbsolutePath.toString
       // one footer visit per file yields BOTH the trustworthy stats and the
       // file's OWN float-leaf set (per-file, not files.head's: a mixed-
       // schema CONVERT adoption batch can carry float leaves the head file
-      // lacks, and head-only discovery would silently drop their bounds)
+      // lacks, and head-only discovery would silently drop their bounds).
+      // The reads run in parallel: each is an independent ~ms metadata
+      // read, and a CONVERT adopting dozens of external files would
+      // otherwise serialize them (q113 regressed +1.3 s on the serial loop)
       type FileMeta = (Map[String, (String, String, String)],
         (Set[String], org.apache.spark.sql.types.StructType))
-      def metaOf(f: String): FileMeta =
-        (VersionedTable.footerStats(rootAbs, f, tz),
-          VersionedTable.floatingLeaves(rootAbs, f))
       val perFile: Map[String, FileMeta] =
-        if (files.size <= maxDriver) {
-          // parallel driver-side footer reads: each is an independent
-          // ~ms metadata read, and a CONVERT adopting dozens of external
-          // files would otherwise serialize them (q113 regressed +1.3 s
-          // on the serial loop)
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.max(1, math.min(8, files.size)))
-          try {
-            val futs = files.map { f =>
-              pool.submit(new java.util.concurrent.Callable[(String, FileMeta)] {
-                def call() = f -> metaOf(f)
-              })
-            }
-            futs.map(_.get()).toMap
-          } finally { pool.shutdown(); () }
-        } else {
-          val slices = math.max(1, files.size / 64)
-          spark.sparkContext.parallelize(files, slices)
-            .map(f => f -> ((VersionedTable.footerStats(rootAbs, f, tz),
-              VersionedTable.floatingLeaves(rootAbs, f))))
-            .collect().toMap
-        }
+        VersionedTable.metadataMap(spark, files)(f => f -> ((
+          VersionedTable.footerStats(rootAbs, f, tz),
+          VersionedTable.floatingLeaves(rootAbs, f)))).toMap
       val dataStats: Map[String, Map[String, (String, String, String)]] =
         perFile.view.mapValues(_._1).toMap
       // FLOAT/DOUBLE bounds cannot be trusted from footers (NaN-poisoned;
@@ -2859,12 +2902,8 @@ final class VersionedTable(val root: String,
         // probes are skipped and those candidates survive
         schema.fields.find(f => f.name == c &&
             vals.forall(literalMatchesType(f.dataType, _))).fold(cand) { f =>
-          import org.apache.spark.sql.functions.expr
-          val lits = vals.map(x =>
-            "'" + x.toString.replace("\\", "\\\\").replace("'", "\\'") + "'").mkString(", ")
           bloomPruneCandidates(spark, cand, c,
-            spark.range(1).select(expr(s"explode(array($lits))").as("__s"))
-              .select(expr(s"xxhash64(CAST(__s AS ${f.dataType.sql}))").as("__h")))
+            n => literalHashes(spark, f.dataType, vals.take(n).map(_.toString)))
         }
       case (cand, _) => cand
     }
@@ -3714,26 +3753,27 @@ final class VersionedTable(val root: String,
       val statless0 = cf.filter(col("__st").isNull)
         .select("path").as[String].collect().toSeq
       // checkpoint-statless files whose partition value bounds the key move
-      // into the range probe (as a LOCAL frame unioned below); a value that
-      // does not survive the cast stays conservatively touched
+      // into the range probe (as a LOCAL frame unioned below)
       val (pvRanged, statless) = statless0.partition(f => pvBound(f).isDefined)
       val pvFrame = pvRanged.map(f => (f, pvBound(f).get, pvBound(f).get))
         .toDF("__file", "__lo", "__hi")
-        .select(col("__file"),
-          col("__lo").cast(keyType).as("__lo"), col("__hi").cast(keyType).as("__hi"))
-      val pvBad = pvFrame.filter(col("__lo").isNull || col("__hi").isNull)
-        .select("__file").as[String].collect().toSeq
       val ranges = cf.filter(col("__st").isNotNull)
         .select(col("path").as("__file"),
-          element_at(col("__st"), 1).cast(keyType).as("__lo"),
-          element_at(col("__st"), 2).cast(keyType).as("__hi"))
-        .unionByName(pvFrame.filter(col("__lo").isNotNull && col("__hi").isNotNull))
+          element_at(col("__st"), 1).as("__lo"), element_at(col("__st"), 2).as("__hi"))
+        .unionByName(pvFrame)
+        .select(col("__file"),
+          col("__lo").cast(keyType).as("__lo"), col("__hi").cast(keyType).as("__hi"))
+      // a recorded stat or partition value that does not survive the cast
+      // cannot prune soundly: such a `bad` file matches every key, so it
+      // stays touched like the manifest branch's `bad` set (a source with
+      // no non-null key can match no row, so nothing is lost when it joins
+      // no key)
       val hit = ranges
-        .join(broadcast(keys),
-          col("__k") >= col("__lo") && col("__k") <= col("__hi"), "leftsemi")
+        .join(broadcast(keys), col("__lo").isNull || col("__hi").isNull ||
+          (col("__k") >= col("__lo") && col("__k") <= col("__hi")), "leftsemi")
         .select("__file").as[String].collect().toSeq
-      bloomPruneCandidates(spark, statless ++ pvBad ++ hit, targetKey,
-        keys.select(expr("xxhash64(__k)").as("__h")))
+      bloomPruneCandidates(spark, statless ++ hit, targetKey,
+        frameHashes(keys.select(expr("xxhash64(__k)").as("__h"))))
     } else {
       val all = filesOf(v)
       val stats = statsOf(v)
@@ -3745,7 +3785,7 @@ final class VersionedTable(val root: String,
       if (ranged.isEmpty)
         // no ranges to pass — the Bloom sidecar (if any) is the only prune
         bloomPruneCandidates(spark, all, targetKey,
-          keys.select(expr("xxhash64(__k)").as("__h")))
+          frameHashes(keys.select(expr("xxhash64(__k)").as("__h"))))
       else {
         val ranges0 = ranged.map { f =>
           val (mn, mx) = boundsOf(f).get; (f, mn, mx)
@@ -3761,7 +3801,7 @@ final class VersionedTable(val root: String,
           .join(broadcast(ranges), col("__k") >= col("__lo") && col("__k") <= col("__hi"))
           .select("__file").distinct().as[String].collect().toSeq
         bloomPruneCandidates(spark, statless ++ bad ++ hit, targetKey,
-          keys.select(expr("xxhash64(__k)").as("__h")))
+          frameHashes(keys.select(expr("xxhash64(__k)").as("__h"))))
       }
     }
   }
@@ -4122,13 +4162,7 @@ final class VersionedTable(val root: String,
     val inProbed = exactValues.foldLeft(ranged) {
       case (cand, (c, vals)) if vals.nonEmpty && bloomIndexColumns.contains(c) =>
         probeType(c).fold(cand) { dt =>
-          import org.apache.spark.sql.functions.expr
-          val lits = vals.map(x =>
-            "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'").mkString(", ")
-          bloomPruneCandidates(spark, cand, c,
-            spark.range(1).select(expr(
-              s"explode(array($lits))").as("__s"))
-              .select(expr(s"xxhash64(CAST(__s AS ${dt.sql}))").as("__h")))
+          bloomPruneCandidates(spark, cand, c, n => literalHashes(spark, dt, vals.take(n)))
         }
       case (cand, _) => cand
     }
@@ -4139,10 +4173,7 @@ final class VersionedTable(val root: String,
         // was rendered in — a mismatched instant hashes differently and
         // would wrongly prune live files
         probeType(c).fold(cand) { dt =>
-          import org.apache.spark.sql.functions.expr
-          val esc = lo.replace("\\", "\\\\").replace("'", "\\'")
-          bloomPruneCandidates(spark, cand, c, spark.range(1).select(
-            expr(s"xxhash64(CAST('$esc' AS ${dt.sql}))").as("__h")))
+          bloomPruneCandidates(spark, cand, c, n => literalHashes(spark, dt, Seq(lo).take(n)))
         }
       case (cand, _) => cand
     }
@@ -4164,17 +4195,20 @@ final class VersionedTable(val root: String,
 
   /** Point-lookup read: serve `column IN keys` scanning only the files that
     * can hold SOME key — the record-level-index serving shape (Delta Bloom
-    * index / Hudi RLI). Two metadata passes, no data I/O for skipped files:
+    * index / Hudi RLI). Two metadata passes on the driver, no data I/O for
+    * skipped files:
     *  - per-KEY min-max stats (a sorted layout probed at two distant points
     *    keeps ~2 files — tighter than the range-hull check [[readBounded]]
     *    runs, whose hull would span the table);
-    *  - Bloom sidecars when `column` is indexed (the uniform round-robin
+    *  - Bloom filters when `column` is indexed (the uniform round-robin
     *    layout min-max cannot prune; timestamps excluded — the rendered key
-    *    would re-parse in the session zone, not the stats zone).
+    *    would re-parse in the session zone, not the stats zone): the keys
+    *    hash in place and probe the cached per-commit filters
+    *    ([[bloomPruneCandidates]]), so with a warm cache pruning runs no
+    *    Spark job; only the returned frame's scan does.
     * Both passes are conservative: unparseable/missing stats keep the file,
-    * rows still need the caller's residual `IN` filter. At 100 TB a 2-key
-    * probe of a million-file table reads kilobytes of manifest + sidecar
-    * and a handful of files, never the table. Returns (df, kept, total). */
+    * rows still need the caller's residual `IN` filter. Returns
+    * (df, kept, total). */
   def readByKeys(spark: SparkSession, column: String, keys: Seq[String],
       relativeVersion: Option[Int] = None,
       versionAsOf: Option[Long] = None): (DataFrame, Int, Int) = {
@@ -4199,12 +4233,7 @@ final class VersionedTable(val root: String,
       if (!bloomIndexColumns.contains(column)) ranged
       else schemaOf(v).flatMap(s => VersionedTable.leafType(s, column))
           .filter(_ != org.apache.spark.sql.types.TimestampType).fold(ranged) { dt =>
-        import org.apache.spark.sql.functions.expr
-        val lits = keys.map(x =>
-          "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'").mkString(", ")
-        bloomPruneCandidates(spark, ranged, column,
-          spark.range(1).select(expr(s"explode(array($lits))").as("__s"))
-            .select(expr(s"xxhash64(CAST(__s AS ${dt.sql}))").as("__h")))
+        bloomPruneCandidates(spark, ranged, column, n => literalHashes(spark, dt, keys.take(n)))
       }
     val df =
       if (kept.nonEmpty) scanLive(spark, kept, schemaOf(v), dvsOf(v),
@@ -6069,11 +6098,21 @@ object VersionedTable {
     }
   }
 
-  /** Hard ceiling on the per-probe Bloom key broadcast (hashes collected to
-    * the driver and shipped to every task): above this, the sidecar pass is
-    * skipped and range/checkpoint pruning alone bound the candidate list.
-    * 1 M longs ≈ 8 MB — batch-sized; a 100 M-key merge stays off the driver. */
+  /** Hard ceiling on the key hashes one Bloom probe holds on the driver:
+    * above this, the sidecar pass is skipped and range/checkpoint pruning
+    * alone bound the candidate list. 1 M longs ≈ 8 MB — batch-sized; a
+    * 100 M-key merge stays off the driver. */
   val BloomProbeMaxKeys = 1000000
+
+  /** Default false-positive rate of a filter sized from its commit's row
+    * counts (no `bloomIndexExpectedItems`). It is the rate per probed key
+    * and file, so a probe of k keys passes a non-matching file with
+    * probability ≈ k × fpp: the signature stores probe hundreds of band
+    * keys per batch, where 0.01 would keep almost every file. The fixed
+    * 100k-item sizing this replaces ran small files at a far lower real
+    * rate; 1e-6 costs 29 bits (3.6 B) per row, still about 30× less than
+    * the fixed 117 KB filter for a 1,000-row file. */
+  val DerivedBloomFpp = 1e-6
 
   /** Stats "kind" of a Spark type — drives the prune-time comparison
     * (numeric vs lexicographic; ISO-rendered timestamps/dates sort
@@ -6277,13 +6316,107 @@ object VersionedTable {
   }
 
   /** (size, mtime, fileKey) fingerprint of the manifest a cached state was
-    * parsed from. Manifests are immutable IN PLACE, but the file itself can
+    * parsed from (and of the Bloom sidecar directory a cached filter set
+    * was decoded from). Manifests are immutable IN PLACE, but the file itself can
     * be replaced — a table dropped and recreated at the same path, or a
     * vacuum materializing the retention floor — and the fingerprint (inode
     * on POSIX) catches that, so a stale cache entry can never serve a
     * different table's state. */
   private[table] final case class ManifestFp(size: Long,
       mtime: java.nio.file.attribute.FileTime, key: AnyRef)
+
+  private[table] def fingerprint(p: Path): Option[ManifestFp] =
+    try {
+      val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+      Some(ManifestFp(a.size(), a.lastModifiedTime(), a.fileKey()))
+    } catch { case _: java.io.IOException => None }
+
+  /** One commit's decoded Bloom sidecar: (table-relative file, column) →
+    * filter, weighed by the serialized bytes it was decoded from. */
+  private[table] final case class BloomSidecar(
+      filters: Map[(String, String), BloomFilter], bytes: Long)
+
+  /** Driver LRU of decoded Bloom sidecars, keyed by the sidecar directory's
+    * absolute path and validated by its [[ManifestFp]] on every lookup.
+    * Sidecars are immutable and named by their commit's UUID, so an entry
+    * stays valid for as long as its directory does; a directory replaced in
+    * place (a table dropped and recreated) fails the fingerprint and reloads.
+    * Bounded by total filter bytes: the most recent entry always stays, so
+    * a probe larger than the bound still completes (it just reloads). */
+  private[table] final class BloomCache(maxBytes: Long) {
+    private var bytes = 0L
+    private val entries =
+      new java.util.LinkedHashMap[String, (ManifestFp, BloomSidecar)](16, 0.75f, true)
+    def get(key: String, fp: ManifestFp): Option[BloomSidecar] = synchronized {
+      Option(entries.get(key)).collect { case (f, s) if f == fp => s }
+    }
+    def put(key: String, fp: ManifestFp, s: BloomSidecar): Unit = synchronized {
+      Option(entries.put(key, (fp, s))).foreach(old => bytes -= old._2.bytes)
+      bytes += s.bytes
+      val it = entries.entrySet.iterator
+      while (bytes > maxBytes && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != key) { bytes -= e.getValue._2.bytes; it.remove() }
+      }
+    }
+    def clear(): Unit = synchronized { entries.clear(); bytes = 0L }
+  }
+
+  private[table] val bloomCache = new BloomCache(64L << 20)
+
+  /** Rows (path, column, filter bytes) of one Bloom sidecar part file, read
+    * with parquet-mr; a row with a null filter is left out, so its file has
+    * no entry and survives every probe. Static, so the above-bound path of
+    * [[metadataMap]] can run it on executors. None when the file vanished
+    * (a concurrent VACUUM): the caller then treats the whole sidecar as
+    * absent. */
+  private[table] def readBloomPart(absFile: String)
+      : Option[Seq[(String, String, Array[Byte])]] =
+    try {
+      val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+        new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(absFile)).build()
+      try Some(Iterator.continually(reader.read()).takeWhile(_ != null)
+        .filter(g => Seq("path", "column", "bloom").forall(g.getFieldRepetitionCount(_) > 0))
+        .map(g => (g.getString("path", 0), g.getString("column", 0),
+          g.getBinary("bloom", 0).getBytes))
+        .toVector)
+      finally reader.close()
+    } catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
+    }
+
+  /** Row count of one data file, from its footer (no data read). */
+  private[table] def footerRows(rootAbs: String, relFile: String): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(Paths.get(rootAbs).resolve(relFile).toString),
+      new org.apache.hadoop.conf.Configuration())
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+    finally reader.close()
+  }
+
+  /** Map a small, independent per-file metadata read (a footer, a Bloom
+    * sidecar part) over `items`: on the driver in a pool of up to 8 threads
+    * while `items` stays within `spark.graft.stats.footerDriverMaxFiles`
+    * (default 256), above that as ONE Spark job of 64 items per task.
+    * `f` must be self-contained: the job ships it to the executors. */
+  private[table] def metadataMap[A: ClassTag, B: ClassTag](spark: SparkSession,
+      items: Seq[A])(f: A => B): Seq[B] = {
+    val maxDriver = spark.conf.getOption("spark.graft.stats.footerDriverMaxFiles")
+      .map(_.toInt).getOrElse(256)
+    if (items.isEmpty) Nil
+    else if (items.size <= maxDriver) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, items.size))
+      try {
+        val futs = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+          def call(): B = f(a)
+        }))
+        futs.map(_.get())
+      } finally { pool.shutdown(); () }
+    } else spark.sparkContext.parallelize(items, math.max(1, items.size / 64))
+      .map(f).collect().toSeq
+  }
 
   /** Per-table LRU of reconstructed snapshots. Eight versions covers the
     * hot shapes — head reads, publish-base lookups, sequential history /

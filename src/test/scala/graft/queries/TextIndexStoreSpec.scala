@@ -259,6 +259,37 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
     assert(postRowsOf(root) === postRowsOf(full))
   }
 
+  test("a replayed txn-stamped sync is a full no-op, even when the cursor " +
+      "did not advance") {
+    val base = tmpDir("txt-sync-replay-")
+    val t = VersionedTable(s"$base/docs")
+    def docs(from: Long, to: Long) = spark.range(from, to).selectExpr("id AS doc_id",
+      "concat('spark merge sort dup w', id % 17, ' window etl x', id % 5) AS text")
+    t.commit(docs(0, 100))
+    val root = s"$base/idx"
+    TextIndexStore.build(spark, root, t.read(spark), "fp0")
+    TextIndexStore.markSynced(root, t.resolve())
+    val synced0 = t.resolve()
+    t.append(docs(100, 130))
+    assert(TextIndexStore.syncFromTable(spark, root, t, "fp1",
+      txn = Some(("sync-app", 1L)))._1 === 30L)
+    val (stats, posts, lex) = (TextIndexStore.stats(root), postRowsOf(root), lexRowsOf(root))
+    // the first run's admission is durable, but it died before the cursor
+    // advanced: the replay must neither evict nor admit
+    TextIndexStore.markSynced(root, synced0)
+    assert(TextIndexStore.syncFromTable(spark, root, t, "fp1",
+      txn = Some(("sync-app", 1L))) === ((0L, 0L)))
+    assert(TextIndexStore.stats(root) === stats)
+    assert(postRowsOf(root) === posts && lexRowsOf(root) === lex)
+    // the next sync re-covers the range from the unmoved cursor: exact
+    assert(TextIndexStore.syncFromTable(spark, root, t, "fp2",
+      txn = Some(("sync-app", 2L))) === ((30L, 30L)))
+    val full = tmpDir("txt-sync-replay-full-") + "/s"
+    TextIndexStore.build(spark, full, docs(0, 130), "fpF")
+    assert(TextIndexStore.stats(root) === TextIndexStore.stats(full))
+    assert(postRowsOf(root) === postRowsOf(full))
+  }
+
   test("evict erases documents exactly: the store equals a build on " +
       "corpus-minus-docs, and a term whose last doc leaves exits the lexicon") {
     val dir = tmpDir("txt-evict-")

@@ -1,6 +1,8 @@
 package graft.table
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -236,5 +238,188 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     val (df, kept, total) = t.readBounded(spark, Seq(("k", Some("5"), Some("5"))))
     assert(t.read(spark).count() === 100 && kept >= 1 && kept <= total)
     assert(df.filter("k = 5").count() === 1)
+  }
+
+  private def filesOf(t: VersionedTable): Seq[String] =
+    t.filesOf(t.resolve())
+
+  /** Spark jobs started while `body` runs. The listener bus is
+    * asynchronous, so a sentinel job in its own group closes the window:
+    * its start event arrives after every event `body` caused. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == s"$tag-sentinel" => sentinelSeen.countDown()
+          case Some(g) if g == tag => counted.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(tag, "probe")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-sentinel", "sentinel")
+      try spark.range(1).rdd.count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, counted.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** The Spark-side probe this suite's driver probe replaced, as an
+    * independent oracle: key hashes from a Spark job over the literal
+    * text, every sidecar row read by Spark's parquet reader, and the
+    * left-join rule — a candidate with no row, or with a null filter,
+    * survives; otherwise it survives iff some key might be present. */
+  private def sparkProbe(t: VersionedTable, candidates: Seq[String],
+      column: String, keys: Seq[String], sqlType: String): Seq[String] = {
+    val lits = keys.map(k => s"'$k'").mkString(", ")
+    val hashes = spark.range(1)
+      .selectExpr(s"explode(array($lits)) AS __s")
+      .selectExpr(s"xxhash64(CAST(__s AS $sqlType))").as[Long].collect().toSeq
+    val rows = spark.read.parquet(s"${t.root}/bloom/*.parquet")
+      .filter($"column" === column).select("path", "bloom")
+      .as[(String, Array[Byte])].collect().groupBy(_._1)
+    candidates.filter(f => rows.get(f).forall(_.exists { case (_, b) =>
+      b == null || hashes.exists(
+        BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)).mightContainLong)
+    }))
+  }
+
+  test("a warm readByKeys probe prunes on the driver: zero Spark jobs") {
+    val t = uniformTable(tmpDir("bloom-jobs-") + "/t", indexed = true)
+    VersionedTable.bloomCache.clear()
+    val ((_, keptCold, _), coldJobs) = jobsDuring(t.readByKeys(spark, "k", Seq("1234")))
+    assert(keptCold >= 1 && keptCold <= 3)
+    assert(coldJobs === 0, "8 sidecar parts are under the driver bound: no job either")
+    val ((df, kept, total), warmJobs) = jobsDuring(t.readByKeys(spark, "k", Seq("777", "4321")))
+    assert(warmJobs === 0, s"a warm probe must run no Spark job, ran $warmJobs")
+    assert(total === 8 && kept >= 1 && kept <= 4)
+    assert(df.filter("k IN (777, 4321)").count() === 2)
+    // the equality and IN channels of readBounded are driver-side too
+    val (_, boundedJobs) = jobsDuring(t.readBounded(spark,
+      Seq(("k", Some("5"), Some("5"))), exactValues = Seq(("k", Seq("5", "6")))))
+    assert(boundedJobs === 0)
+  }
+
+  test("driver probe keeps exactly the files the Spark-side probe kept") {
+    val base = tmpDir("bloom-oracle-")
+    val t = uniformTable(base + "/t", indexed = true)
+    // a second, differently sized commit: two sidecars, two filter sizes
+    t.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2))
+    val files = filesOf(t)
+    val v = t.resolve()
+    val rnd = new scala.util.Random(7)
+    val probes = Seq(Seq("1234"), Seq("8100"), Seq("999999")) ++
+      (1 to 20).map(_ => Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(8400).toString))
+    probes.foreach { keys =>
+      val driver = t.bloomPruneForPredicate(spark, v, files,
+        s"k IN (${keys.mkString(", ")})")
+      assert(driver === sparkProbe(t, files, "k", keys, "BIGINT"), s"keys $keys")
+      val (_, kept, _) = t.readByKeys(spark, "k", keys)
+      assert(kept <= driver.size)
+    }
+    // the nested-leaf table of the suite: same rule on a dotted name
+    val n = VersionedTable(tmpDir("bloom-oracle-n-") + "/t")
+    n.setProperties(Map("bloomIndexColumns" -> "meta.media_id",
+      "bloomIndexExpectedItems" -> "2000", "bloomIndexFpp" -> "0.01"))
+    n.commit(spark.range(0, 8000).selectExpr(
+      "named_struct('media_id', id * 37 % 8000, 'format', 'png') AS meta", "id AS v"),
+      numPartitions = Some(8))
+    Seq("1234", "5", "7999").foreach { k =>
+      val (_, kept, _) = n.readByKeys(spark, "meta.media_id", Seq(k))
+      assert(kept === sparkProbe(n, filesOf(n), "meta.media_id", Seq(k), "BIGINT").size)
+    }
+  }
+
+  test("a file whose sidecar directory was deleted survives every probe") {
+    val root = tmpDir("bloom-gone-") + "/t"
+    val t = uniformTable(root, indexed = true)
+    t.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2))
+    val files = filesOf(t)
+    val v = t.resolve()
+    // warm the cache, then delete the first commit's sidecar
+    assert(t.bloomPruneForPredicate(spark, v, files, "k = 8100").size <= 2)
+    val firstCid = t.filesOf(0L).head.split('/')(1)
+    val appended = files.filterNot(_.contains(firstCid))
+    val sidecar = Paths.get(root, "bloom", s"$firstCid.parquet")
+    Files.walk(sidecar).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    val kept = t.bloomPruneForPredicate(spark, v, files, "k = 8100")
+    assert(files.filter(_.contains(firstCid)).forall(kept.contains),
+      "files without a sidecar must survive even with a warm cache")
+    assert(kept.count(appended.contains) >= 1 && kept.count(appended.contains) <= 2)
+    assert(t.read(spark).filter("k = 1234").count() === 1)
+    val (df, _, _) = t.readByKeys(spark, "k", Seq("1234"))
+    assert(df.filter("k = 1234").count() === 1)
+  }
+
+  test("a table dropped and recreated at the same path is never served stale filters") {
+    val root = tmpDir("bloom-recreate-") + "/t"
+    val t = uniformTable(root, indexed = true)
+    assert(t.readByKeys(spark, "k", Seq("1234"))._2 <= 3) // warm
+    def rmTree(p: java.nio.file.Path): Unit =
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    rmTree(Paths.get(root))
+    VersionedTable.clearStateCache()
+    val t2 = VersionedTable(root)
+    t2.setProperties(Map("bloomIndexColumns" -> "k"))
+    t2.commit(spark.range(0, 800).selectExpr("id * 10 + 1 AS k", "id AS v"),
+      numPartitions = Some(4))
+    val (df, kept, total) = t2.readByKeys(spark, "k", Seq("1231"))
+    assert(total === 4 && kept >= 1)
+    assert(df.filter("k = 1231").count() === 1)
+    // the same sidecar path replaced in place: the directory fingerprint
+    // changes, so the cached filters are dropped, not served. The new
+    // content holds a null filter for every file — all of them survive.
+    val files = filesOf(t2)
+    val cid = files.head.split('/')(1)
+    val sidecar = Paths.get(root, "bloom", s"$cid.parquet")
+    assert(t2.bloomPruneForPredicate(spark, t2.resolve(), files, "k = 1231").size < 4)
+    rmTree(sidecar)
+    files.map(f => (f, "k", null: Array[Byte])).toDF("path", "column", "bloom")
+      .coalesce(1).write.parquet(sidecar.toString)
+    assert(t2.bloomPruneForPredicate(spark, t2.resolve(), files, "k = 1231") === files)
+  }
+
+  test("above the driver bound the sidecars load in one job, same files kept") {
+    val base = tmpDir("bloom-bound-")
+    val t = uniformTable(base + "/t", indexed = true)
+    t.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2))
+    val files = filesOf(t)
+    val v = t.resolve()
+    val probes = Seq("k = 1234", "k IN (3, 7005, 8200)", "k = 999999")
+    VersionedTable.bloomCache.clear()
+    val onDriver = probes.map(p => t.bloomPruneForPredicate(spark, v, files, p))
+    val key = "spark.graft.stats.footerDriverMaxFiles"
+    spark.conf.set(key, "0")
+    try {
+      VersionedTable.bloomCache.clear()
+      val (inJob, jobs) = jobsDuring(
+        probes.map(p => t.bloomPruneForPredicate(spark, v, files, p)))
+      assert(inJob === onDriver)
+      assert(jobs === 1, s"the cold load is one job, later probes hit the cache; ran $jobs")
+    } finally spark.conf.unset(key)
+  }
+
+  test("filters are sized from the commit's row counts unless expectedItems is set") {
+    def bloomBytes(root: String): Seq[Int] =
+      spark.read.parquet(s"$root/bloom/*.parquet").select("bloom").as[Array[Byte]]
+        .collect().map(_.length).toSeq
+    val small = VersionedTable(tmpDir("bloom-size-") + "/t")
+    small.setProperties(Map("bloomIndexColumns" -> "k"))
+    small.commit(spark.range(0, 50).selectExpr("id AS k", "id AS v").coalesce(1))
+    // 50 rows at the derived 1e-6 rate: 1,438 bits — a few hundred bytes,
+    // not the 117 KB of a fixed 100k-item filter
+    assert(bloomBytes(small.root).forall(_ < 512), bloomBytes(small.root))
+    assert(small.readByKeys(spark, "k", Seq("7"))._1.filter("k = 7").count() === 1)
+    assert(small.readByKeys(spark, "k", Seq("70"))._2 === 0, "an absent key keeps no file")
+    val fixed = VersionedTable(tmpDir("bloom-size-fixed-") + "/t")
+    fixed.setProperties(Map("bloomIndexColumns" -> "k", "bloomIndexExpectedItems" -> "100000"))
+    fixed.commit(spark.range(0, 50).selectExpr("id AS k", "id AS v").coalesce(1))
+    assert(bloomBytes(fixed.root).forall(_ > 100000), "the explicit override still sizes")
   }
 }

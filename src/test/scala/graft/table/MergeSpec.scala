@@ -332,4 +332,44 @@ class MergeSpec extends AnyFunSuite with SparkSpec {
     assert(files0.filter(f => !perPart.get(Some("3")).exists(_.contains(f)))
       .forall(filesAfter.contains))
   }
+
+  /** A 4-file table whose first file's recorded `k` bounds are strings no
+    * BIGINT cast accepts (a foreign or damaged writer's stats): the merge
+    * prune must keep that file touched, never skip it. */
+  private def forgedBoundsTable(prefix: String): (VersionedTable, String) = {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.{ArrayNode, TextNode}
+    val t = VersionedTable(tmpDir(prefix) + "/t")
+    t.commit(spark.range(0, 400).selectExpr("id AS k", "id AS v"),
+      numPartitions = Some(4), sortBy = Seq("k"))
+    val forged = t.filesOf(0L).find(f => t.statsOf(0L)(f)("k")._1 == "0").get
+    val log = java.nio.file.Paths.get(t.root, "_graft_log", "v00000000.json")
+    val mapper = new ObjectMapper()
+    val node = mapper.readTree(java.nio.file.Files.readAllBytes(log))
+    val bounds = node.get("stats").get(forged).get("k").asInstanceOf[ArrayNode]
+    bounds.set(0, TextNode.valueOf("zzz"))
+    bounds.set(1, TextNode.valueOf("zzz"))
+    java.nio.file.Files.write(log, mapper.writeValueAsBytes(node))
+    VersionedTable.clearStateCache()
+    assert(t.statsOf(0L)(forged)("k")._1 === "zzz")
+    (t, forged)
+  }
+
+  test("a key bound that does not cast keeps its file touched, with or " +
+      "without a checkpoint") {
+    assert(!spark.conf.get("spark.sql.ansi.enabled").toBoolean,
+      "precondition: a failed cast yields null (the ANSI-off session)")
+    Seq(false, true).foreach { checkpointed =>
+      val (t, forged) = forgedBoundsTable("mrg-badbound-")
+      if (checkpointed) assert(t.checkpoint(spark) === 0L)
+      val (_, touched) = t.mergeCow(spark, Seq((5L, -1L)).toDF("k", "v"),
+        "source.k = target.k", targetKey = "k", sourceKey = "k",
+        whenMatchedUpdate = Some(Merge.MatchedUpdate(None, Map("v" -> "source.v"))))
+      assert(touched === 1, s"checkpointed=$checkpointed: the forged file must be touched")
+      assert(!t.filesOf(t.resolve()).contains(forged))
+      assert(t.read(spark).filter("k = 5").select("v").as[Long].collect().toSeq === Seq(-1L),
+        s"checkpointed=$checkpointed: the update must land")
+      assert(t.read(spark).count() === 400)
+    }
+  }
 }
