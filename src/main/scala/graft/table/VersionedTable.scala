@@ -1564,12 +1564,8 @@ final class VersionedTable(val root: String,
     val ks = hashes(cap + 1)
     if (ks.length > cap) return candidates
     val sidecars = bloomSidecarsOf(spark, cids)
-    candidates.filter { f =>
-      commitIdOf(f).flatMap(sidecars.get).flatMap(_.filters.get((f, column))) match {
-        case Some(bf) => ks.exists(bf.mightContainLong)
-        case None => true
-      }
-    }
+    candidates.filter(f => commitIdOf(f).flatMap(sidecars.get)
+      .flatMap(_.filters.get((f, column))).forall(bf => ks.exists(bf.mightContainLong)))
   }
 
   /** The commit id a table-relative data file was written under. */
