@@ -60,37 +60,27 @@ object Bench {
     // cost as its own tracked number), then the warm fingerprint-verify
     // (what every later process pays). Recording only the warm number
     // would make a build regression invisible.
-    val ivfBuildCold =
-      if (only.nonEmpty && !only.exists(ivfConsumers)) -1.0
-      else try graft.queries.SimilarityQueries.buildIndexCold(spark, sfDir)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] ivf cold index build failed: ${e.getMessage}")
+    // a build phase is None when the query filter skips it, and -1 when it
+    // failed: a failed build is recorded and counted in n_failed
+    def buildPhase(enabled: Boolean, what: String)(build: => Double): Option[Double] =
+      if (!enabled) None
+      else Some(try build catch { case e: Exception =>
+        System.err.println(s"[bench] $what failed: ${e.getMessage}")
         -1.0
-      }
-    val ivfBuild =
-      if (only.nonEmpty && !only.exists(ivfConsumers)) -1.0
-      else try graft.queries.SimilarityQueries.buildIndex(spark, sfDir)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] ivf index build failed: ${e.getMessage}")
-        -1.0
-      }
+      })
+    val ivfWanted = only.isEmpty || only.exists(ivfConsumers)
+    val ivfBuildCold = buildPhase(ivfWanted, "ivf cold index build")(
+      graft.queries.SimilarityQueries.buildIndexCold(spark, sfDir))
+    val ivfBuild = buildPhase(ivfWanted, "ivf index build")(
+      graft.queries.SimilarityQueries.buildIndex(spark, sfDir))
     // the BM25 text index gets the same cold/warm recording (s14 serves
     // from it; its one-time tokenize-and-layout must not silently tax the
     // first consumer or vanish from the record)
-    val bm25Cold =
-      if (only.nonEmpty && !only.contains("s14_bm25_stored")) -1.0
-      else try graft.queries.SimilarityQueries.buildTextIndexCold(spark, sfDir)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] bm25 cold index build failed: ${e.getMessage}")
-        -1.0
-      }
-    val bm25Warm =
-      if (only.nonEmpty && !only.contains("s14_bm25_stored")) -1.0
-      else try graft.queries.SimilarityQueries.buildTextIndex(spark, sfDir)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] bm25 index build failed: ${e.getMessage}")
-        -1.0
-      }
+    val bm25Wanted = only.isEmpty || only.contains("s14_bm25_stored")
+    val bm25Cold = buildPhase(bm25Wanted, "bm25 cold index build")(
+      graft.queries.SimilarityQueries.buildTextIndexCold(spark, sfDir))
+    val bm25Warm = buildPhase(bm25Wanted, "bm25 index build")(
+      graft.queries.SimilarityQueries.buildTextIndex(spark, sfDir))
     val picked = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
     // lifecycle/serve split rows for queries that mark their phase
@@ -183,11 +173,10 @@ object Bench {
         name -> best
       } else name -> t
     }
-    val results = retimed ++ splits.toSeq ++
-      (if (ivfBuildCold >= 0) Seq("ivf_build_cold" -> ivfBuildCold) else Nil) ++
-      (if (ivfBuild >= 0) Seq("ivf_build" -> ivfBuild) else Nil) ++
-      (if (bm25Cold >= 0) Seq("bm25_build_cold" -> bm25Cold) else Nil) ++
-      (if (bm25Warm >= 0) Seq("bm25_build" -> bm25Warm) else Nil)
+    val builds = Seq("ivf_build_cold" -> ivfBuildCold, "ivf_build" -> ivfBuild,
+      "bm25_build_cold" -> bm25Cold, "bm25_build" -> bm25Warm)
+      .collect { case (k, Some(v)) => k -> v }
+    val results = retimed ++ splits.toSeq ++ builds
     // millisecond precision keeps the single JSON line compact enough to
     // survive the driver's bounded output-tail capture (a full-precision
     // double per query pushed past it and the line arrived truncated)
@@ -197,8 +186,7 @@ object Bench {
       .mkString("{", ",", "}")
     // the _setup/_serve rows decompose combined entries already counted —
     // summing them too would double-count the suite total
-    val total = retimed.map(_._2).filter(_ >= 0).sum +
-      Seq(ivfBuildCold, ivfBuild, bm25Cold, bm25Warm).filter(_ >= 0).sum
+    val total = (retimed ++ builds).map(_._2).filter(_ >= 0).sum
     val cont =
       if (contention.isEmpty) ""
       else contention.map { case (k, v) =>
@@ -227,8 +215,8 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    val nFailed = retimed.count(_._2 < 0)
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries_file":${Verify.jsonQuote(outPath)},"sf":${Verify.jsonQuote(sfDir)}}""")
+    val nFailed = (retimed ++ builds).count(_._2 < 0)
+    println(s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"queries_file":${Verify.jsonQuote(outPath)},"sf":${Verify.jsonQuote(sfDir)}}""")
     spark.stop()
   }
 }

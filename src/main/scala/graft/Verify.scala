@@ -30,7 +30,11 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // no spark.sql.parquet.outputTimestampType: the dumps keep Spark's
+      // default encoding, which DuckDB reads as TIMESTAMP like the oracle
+      // SQL's results; TIMESTAMP_MICROS marks the column UTC-adjusted and
+      // DuckDB reads TIMESTAMP WITH TIME ZONE. Table commits set micros
+      // in the write funnel themselves.
       .config("spark.ui.enabled", "false")
       // reference-parity semantics (Spark 3.0-era lenient casts/coercions —
       // SURVEY.md §7 hard part #3) + nanos-timestamp testdata readability

@@ -60,13 +60,6 @@ object GraftFunctions {
         case other => throw new IllegalArgumentException(
           s"bloom_might_contain expects (binary, long), got ${other.size} args")
       }),
-    ("bloom_build_agg", classOf[BloomBuildAgg], (exprs: Seq[Expression]) => exprs match {
-      case Seq(hashed, items, fpp) => BloomBuildAgg(hashed,
-        items.eval().asInstanceOf[Number].longValue(),
-        fpp.eval().asInstanceOf[Number].doubleValue())
-      case other => throw new IllegalArgumentException(
-        s"bloom_build_agg expects (bigint, expectedItems, fpp), got ${other.size} args")
-    }),
     ("vec_dot", classOf[DotProduct], (exprs: Seq[Expression]) => exprs match {
       case Seq(a, b) => DotProduct(a, b)
       case other => throw new IllegalArgumentException(

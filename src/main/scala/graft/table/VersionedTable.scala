@@ -1353,7 +1353,18 @@ final class VersionedTable(val root: String,
     * partitioned writes) each file's partition values parsed back from the
     * hive layout the writer produced (URL-unescaped; the hive null marker →
     * None). Partitioned writes store only the DATA columns in the files —
-    * the partition values live in the directory names and the manifest. */
+    * the partition values live in the directory names and the manifest.
+    *
+    * The write is one Spark job: `FileFormatWriter.write` under a new SQL
+    * execution, with Spark's basic stats tracker and, on a table with
+    * `bloomIndexColumns`, a [[BloomWriteTracker]] that builds each file's
+    * Bloom filters in the task that writes the file. Each filter is sized
+    * from its own file's row count at `bloomIndexFpp` (default
+    * [[VersionedTable.DerivedBloomFpp]]); an explicit
+    * `bloomIndexExpectedItems` sizes every filter instead (`bloomIndexFpp`
+    * default 0.01). The driver then writes the committed files' filters as
+    * the commit's sidecar ([[bloomSidecarPath]]) with parquet-mr and puts
+    * them, decoded, into [[VersionedTable.bloomCache]]. */
   private def writeDataFiles(df: DataFrame, numPartitions: Option[Int],
       sortBy: Seq[String], partitionBy: Seq[String] = Nil)
       : (String, Seq[String], Map[String, Map[String, Option[String]]],
@@ -1386,7 +1397,7 @@ final class VersionedTable(val root: String,
       case (Some(n), _) => stamped.repartition(n)
       case _ => stamped
     }
-    val writer = out.write.mode("overwrite")
+    val bloom = bloomTracker(out.schema, partitionBy)
     // TIMESTAMP_MICROS, not Spark's INT96 default: INT96 is deprecated,
     // 50% fatter per value, and carries NO footer statistics — with it a
     // timestamp column can never range-prune under the footer stats mode.
@@ -1396,28 +1407,23 @@ final class VersionedTable(val root: String,
     val sqlConf = out.sparkSession.sessionState.conf
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val tsPrev = sqlConf.getConfString(tsKey, "INT96")
-    // The engine's own session builders (Bench/Verify/Profile/SparkSpec/
-    // JobChild) now set TIMESTAMP_MICROS at session build, so the common
-    // case mutates NOTHING — the set/restore below is only the fallback for
-    // foreign sessions, where two concurrent commits to DIFFERENT tables
-    // could otherwise race the restore and emit an INT96 file (consequence:
-    // lost timestamp footer stats — conservative no-prune, never wrong
-    // rows; single-writer-per-TABLE is the protocol, cross-table isn't).
-    if (tsPrev == "TIMESTAMP_MICROS") {
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(outDir.toString)
-    } else {
+    // Sessions that already set TIMESTAMP_MICROS mutate NOTHING — the
+    // set/restore below is the fallback for other sessions, where two
+    // concurrent commits to DIFFERENT tables could otherwise race the
+    // restore and emit an INT96 file (consequence: lost timestamp footer
+    // stats — conservative no-prune, never wrong rows; single-writer-per-
+    // TABLE is the protocol, cross-table isn't).
+    if (tsPrev == "TIMESTAMP_MICROS") writeParquet(out, outDir, partitionBy, bloom.toSeq)
+    else {
       sqlConf.setConfString(tsKey, "TIMESTAMP_MICROS")
-      try (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(outDir.toString)
+      try writeParquet(out, outDir, partitionBy, bloom.toSeq)
       finally sqlConf.setConfString(tsKey, tsPrev)
     }
     def isData(n: String) =
       n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    if (partitionBy.isEmpty) {
-      val files = listNames(outDir).filter(isData).map(n => s"data/$commitId/$n").sorted
-      buildBloomSidecar(df.sparkSession, commitId, files)
-      (commitId, files, Map.empty, stampedIds)
+    val (files, partVals) = if (partitionBy.isEmpty) {
+      (listNames(outDir).filter(isData).map(n => s"data/$commitId/$n").sorted,
+        Map.empty[String, Map[String, Option[String]]])
     } else {
       // walk the hive layout: every leaf parquet sits under one k=v segment
       // per partition column, in partitionBy order. Hive escaping is plain
@@ -1451,10 +1457,53 @@ final class VersionedTable(val root: String,
           }
         }
       walk(outDir, Nil, Map.empty)
-      val files = found.map(_._1).sorted
-      buildBloomSidecar(df.sparkSession, commitId, files.toSeq)
-      (commitId, files.toSeq, found.map { case (f, v) => f -> v }.toMap, stampedIds)
+      (found.map(_._1).sorted.toSeq, found.toMap)
     }
+    bloom.foreach { t =>
+      val rows = t.entries.map { case (rel, c, b) => (s"data/$commitId/$rel", c, b) }
+      if (rows.nonEmpty) {
+        val dir = bloomSidecarPath(commitId)
+        BloomWriteTracker.writeSidecar(dir, rows)
+        // write-through: the first probe after this commit reads no sidecar
+        VersionedTable.fingerprint(dir).foreach(fp =>
+          VersionedTable.bloomCache.put(dir.toString, fp, VersionedTable.BloomSidecar(rows)))
+      }
+    }
+    (commitId, files, partVals, stampedIds)
+  }
+
+  /** Run `out`'s plan as one parquet write job into `outDir`, the way
+    * Spark's own file-source insert does (`FileFormatWriter.write` with the
+    * session's commit protocol, under a new SQL execution), plus `extra`
+    * stats trackers. */
+  private def writeParquet(out: DataFrame, outDir: Path, partitionBy: Seq[String],
+      extra: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker]): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    val spark = out.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = spark.sessionState.conf
+    val names = out.columns.toSeq.map(c =>
+      if (conf.caseSensitiveAnalysis) c else c.toLowerCase(java.util.Locale.ROOT))
+    require(names.distinct.size == names.size,
+      s"duplicate column name(s) in the frame being written: ${names.diff(names.distinct).distinct.mkString(", ")}")
+    val qe = out.queryExecution
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, outDir.toString)
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(spark, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        committer,
+        FileFormatWriter.OutputSpec(outDir.toString, Map.empty, plan.output),
+        hadoopConf,
+        partitionBy.map(c => plan.output.find(_.name == c).get),
+        None, basic +: extra, Map.empty)
+    }
+    ()
   }
 
   /** Columns carrying a per-file Bloom sidecar (table property
@@ -1468,74 +1517,41 @@ final class VersionedTable(val root: String,
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   /** One sidecar parquet dataset per commit, addressed BY COMMIT ID
-    * (`bloom/<commitId>.parquet`) — data files are immutable and so are
-    * their filters, so deterministic pathing needs no manifest threading;
-    * a candidate file's sidecar is found from its own path, and [[vacuum]]
-    * retires a sidecar with its commit. Rows are (path, column, bloom). */
+    * (`bloom/<commitId>.parquet`, absolute) — data files are immutable and
+    * so are their filters, so deterministic pathing needs no manifest
+    * threading; a candidate file's sidecar is found from its own path, and
+    * [[vacuum]] retires a sidecar with its commit. Rows are (path, column,
+    * bloom): one per (non-empty data file, indexed column), with the filter
+    * built by the task that wrote the file and sized from that file's row
+    * count (see [[writeDataFiles]]). The driver writes them once the write
+    * job has committed, as one `part-00000.parquet` written with parquet-mr,
+    * so building a commit's sidecar runs no Spark job. Sidecars written by
+    * Spark's parquet writer (older commits) have the same schema and are
+    * read the same way. */
   private def bloomSidecarPath(commitId: String): Path =
-    bloomDir.resolve(s"$commitId.parquet")
+    bloomDir.resolve(s"$commitId.parquet").toAbsolutePath.normalize
 
-  /** Build the Bloom sidecar for a freshly written commit: one filter per
-    * (file, indexed column) over `xxhash64(col)` — pre-hashed so build and
-    * probe agree on the rendering of any column type. Runs as ONE
-    * distributed grouped aggregation over the new batch (map-side
-    * combinable; the vectors never leave the executors — only
-    * filter bytes land in the sidecar). Partition columns don't live in
-    * the data files and are served by partition pruning, so only
-    * file-resident columns index. */
-  private def buildBloomSidecar(spark: SparkSession, commitId: String,
-      files: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{expr, input_file_name, xxhash64}
-    if (bloomIndexColumns.isEmpty || files.isEmpty) return
-    val written = spark.read.parquet(
-      files.map(f => Paths.get(root).resolve(f).toString): _*)
-    // an indexed name resolves like a stats key (leafType's collision rule:
-    // exact top-level first, then the dotted struct walk — so a nested
-    // id-like leaf such as `meta.media_id` indexes under exactly the name
-    // a pushed nested predicate carries); arrays/maps/missing → skipped
-    def quotedTop(c: String) = col(s"`${c.replace("`", "``")}`")
-    def columnFor(c: String): Option[org.apache.spark.sql.Column] =
-      if (written.columns.contains(c)) Some(quotedTop(c))
-      else VersionedTable.leafType(written.schema, c).map { _ =>
-        val parts = c.split('.')
-        parts.tail.foldLeft(quotedTop(parts.head))(_.getField(_))
-      }
-    val cols = bloomIndexColumns.flatMap(c => columnFor(c).map(c -> _))
-    if (cols.isEmpty) return
-    graft.functions.GraftFunctions.registerAll(spark)
-    // Sizing: an explicit `bloomIndexExpectedItems` wins (at `bloomIndexFpp`,
-    // default 0.01). Otherwise every filter of the commit is sized for the
-    // row count of its largest file (the footers the writer just produced:
-    // rows bound the distinct values from above), at `bloomIndexFpp`,
-    // default DerivedBloomFpp — see there for why it is tighter.
-    val (items, fpp) = properties.get("bloomIndexExpectedItems") match {
-      case Some(n) =>
-        (n.toLong, properties.get("bloomIndexFpp").map(_.toDouble).getOrElse(0.01))
-      case None =>
-        val rootAbs = Paths.get(root).toAbsolutePath.toString
-        (math.max(1L, VersionedTable.metadataMap(spark, files)(
-            f => VersionedTable.footerRows(rootAbs, f)).max),
-          properties.get("bloomIndexFpp").map(_.toDouble)
-            .getOrElse(VersionedTable.DerivedBloomFpp))
-    }
-    // pre-hash under index-based aliases (dotted names don't ride SQL text)
-    val hashed = written.select(input_file_name().as("__f") +:
-      cols.zipWithIndex.map { case ((_, cx), i) => xxhash64(cx).as(s"__h_$i") }: _*)
-    val aggs = cols.indices.map(i =>
-      expr(s"bloom_build_agg(__h_$i, ${items}L, ${fpp}D)").as(s"__b_$i"))
-    val perFile = hashed.groupBy(col("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-    val stackArgs = cols.zipWithIndex
-      .map { case ((c, _), i) => s"'${c.replace("'", "''")}', __b_$i" }.mkString(", ")
-    // normalize to the manifest's table-relative on-disk names (same
-    // uriDecode + commit-dir anchoring as collectFileStats, kept
-    // distributed — only filter bytes land in the sidecar)
-    perFile.select(uriDecodeCol(col("__f")).as("__fd"),
-        expr(s"stack(${cols.size}, $stackArgs)").as(Seq("column", "bloom")))
-      .filter(expr(s"instr(__fd, 'data/$commitId/') > 0"))
-      .select(expr(s"substring(__fd, instr(__fd, 'data/$commitId/'))").as("path"),
-        col("column"), col("bloom"))
-      .write.mode("overwrite").parquet(bloomSidecarPath(commitId).toString)
+  /** The tracker that builds a commit's Bloom filters inside its write job,
+    * for the indexed columns that resolve in the files' data schema
+    * (`schema` minus the partition columns, which live in the directory
+    * names and are served by partition pruning); None when none resolves.
+    * Sizing: an explicit `bloomIndexExpectedItems` wins (at `bloomIndexFpp`,
+    * default 0.01); otherwise each filter is sized for its own file's row
+    * count (rows bound the distinct values from above), at `bloomIndexFpp`,
+    * default DerivedBloomFpp — see there for why it is tighter. */
+  private def bloomTracker(schema: org.apache.spark.sql.types.StructType,
+      partitionBy: Seq[String]): Option[BloomWriteTracker] = {
+    if (bloomIndexColumns.isEmpty) return None
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.fields.filterNot(f => partitionBy.contains(f.name)))
+    val hashes = BloomWriteTracker.hashExpressions(dataSchema, bloomIndexColumns)
+    if (hashes.isEmpty) return None
+    val items = properties.get("bloomIndexExpectedItems").map(_.toLong)
+    val fpp = properties.get("bloomIndexFpp").map(_.toDouble)
+      .getOrElse(if (items.isDefined) 0.01 else VersionedTable.DerivedBloomFpp)
+    require(items.forall(_ > 0), "bloomIndexExpectedItems must be > 0")
+    require(fpp > 0 && fpp < 1, "bloomIndexFpp must be in (0, 1)")
+    Some(new BloomWriteTracker(hashes, partitionBy.size + 1, items, fpp))
   }
 
   /** Bloom pass over a range-pruned candidate file list, run on the
@@ -1584,7 +1600,7 @@ final class VersionedTable(val root: String,
       : Map[String, VersionedTable.BloomSidecar] = {
     val cache = VersionedTable.bloomCache
     val located = cids.flatMap { c =>
-      val dir = bloomSidecarPath(c).toAbsolutePath.normalize
+      val dir = bloomSidecarPath(c)
       VersionedTable.fingerprint(dir).map(fp => (c, dir, fp))
     }
     val (hits, misses) = located.partitionMap { case (c, dir, fp) =>
@@ -1600,12 +1616,7 @@ final class VersionedTable(val root: String,
       val rows = rowsOf.getOrElse(c, Nil)
       if (rows.contains(None)) None
       else {
-        val flat = rows.flatten.flatten
-        val sidecar = VersionedTable.BloomSidecar(
-          flat.map { case (path, column, bytes) =>
-            (path, column) -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-          }.toMap,
-          flat.map(_._3.length.toLong).sum)
+        val sidecar = VersionedTable.BloomSidecar(rows.flatten.flatten)
         cache.put(dir.toString, fp, sidecar)
         Some(c -> sidecar)
       }
@@ -6100,8 +6111,8 @@ object VersionedTable {
     * 100 M-key merge stays off the driver. */
   val BloomProbeMaxKeys = 1000000
 
-  /** Default false-positive rate of a filter sized from its commit's row
-    * counts (no `bloomIndexExpectedItems`). It is the rate per probed key
+  /** Default false-positive rate of a filter sized from its file's row
+    * count (no `bloomIndexExpectedItems`). It is the rate per probed key
     * and file, so a probe of k keys passes a non-matching file with
     * probability ≈ k × fpp: the signature stores probe hundreds of band
     * keys per batch, where 0.01 would keep almost every file. The fixed
@@ -6332,6 +6343,14 @@ object VersionedTable {
   private[table] final case class BloomSidecar(
       filters: Map[(String, String), BloomFilter], bytes: Long)
 
+  private[table] object BloomSidecar {
+    /** Decode sidecar rows (table-relative file, column, filter bytes). */
+    def apply(rows: Seq[(String, String, Array[Byte])]): BloomSidecar =
+      BloomSidecar(rows.map { case (path, column, bytes) =>
+        (path, column) -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+      }.toMap, rows.map(_._3.length.toLong).sum)
+  }
+
   /** Driver LRU of decoded Bloom sidecars, keyed by the sidecar directory's
     * absolute path and validated by its [[ManifestFp]] on every lookup.
     * Sidecars are immutable and named by their commit's UUID, so an entry
@@ -6381,16 +6400,6 @@ object VersionedTable {
     } catch {
       case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
     }
-
-  /** Row count of one data file, from its footer (no data read). */
-  private[table] def footerRows(rootAbs: String, relFile: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(Paths.get(rootAbs).resolve(relFile).toString),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
 
   /** Map a small, independent per-file metadata read (a footer, a Bloom
     * sidecar part) over `items`: on the driver in a pool of up to 8 threads

@@ -306,6 +306,14 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     assert(boundedJobs === 0)
   }
 
+  /** Key sets over the uniform table plus its 400-key append: a key of
+    * each commit, an absent key, and 20 random sets of 1–4 keys. */
+  private val probeKeySets: Seq[Seq[String]] = {
+    val rnd = new scala.util.Random(7)
+    Seq(Seq("1234"), Seq("8100"), Seq("999999")) ++
+      (1 to 20).map(_ => Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(8400).toString))
+  }
+
   test("driver probe keeps exactly the files the Spark-side probe kept") {
     val base = tmpDir("bloom-oracle-")
     val t = uniformTable(base + "/t", indexed = true)
@@ -313,10 +321,7 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
     t.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2))
     val files = filesOf(t)
     val v = t.resolve()
-    val rnd = new scala.util.Random(7)
-    val probes = Seq(Seq("1234"), Seq("8100"), Seq("999999")) ++
-      (1 to 20).map(_ => Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(8400).toString))
-    probes.foreach { keys =>
+    probeKeySets.foreach { keys =>
       val driver = t.bloomPruneForPredicate(spark, v, files,
         s"k IN (${keys.mkString(", ")})")
       assert(driver === sparkProbe(t, files, "k", keys, "BIGINT"), s"keys $keys")
@@ -406,20 +411,183 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("filters are sized from the commit's row counts unless expectedItems is set") {
-    def bloomBytes(root: String): Seq[Int] =
-      spark.read.parquet(s"$root/bloom/*.parquet").select("bloom").as[Array[Byte]]
-        .collect().map(_.length).toSeq
+    def bloomBytes(t: VersionedTable): Seq[Int] = sidecarRows(t).map(_._3.length)
     val small = VersionedTable(tmpDir("bloom-size-") + "/t")
     small.setProperties(Map("bloomIndexColumns" -> "k"))
     small.commit(spark.range(0, 50).selectExpr("id AS k", "id AS v").coalesce(1))
     // 50 rows at the derived 1e-6 rate: 1,438 bits — a few hundred bytes,
     // not the 117 KB of a fixed 100k-item filter
-    assert(bloomBytes(small.root).forall(_ < 512), bloomBytes(small.root))
+    assert(bloomBytes(small).forall(_ < 512), bloomBytes(small))
     assert(small.readByKeys(spark, "k", Seq("7"))._1.filter("k = 7").count() === 1)
     assert(small.readByKeys(spark, "k", Seq("70"))._2 === 0, "an absent key keeps no file")
     val fixed = VersionedTable(tmpDir("bloom-size-fixed-") + "/t")
     fixed.setProperties(Map("bloomIndexColumns" -> "k", "bloomIndexExpectedItems" -> "100000"))
     fixed.commit(spark.range(0, 50).selectExpr("id AS k", "id AS v").coalesce(1))
-    assert(bloomBytes(fixed.root).forall(_ > 100000), "the explicit override still sizes")
+    assert(bloomBytes(fixed).forall(_ > 100000), "the explicit override still sizes")
+    // one commit of a 50-row and a 5,000-row file: each filter is sized
+    // from its own file, so the small file's stays small
+    def perFile(props: Map[String, String]): Map[String, Int] = {
+      val t = VersionedTable(tmpDir("bloom-size-per-file-") + "/t")
+      t.setProperties(props)
+      t.commit(spark.range(0, 5050).selectExpr("id AS k", "IF(id < 50, 'small', 'big') AS p"),
+        numPartitions = Some(1), partitionBy = Seq("p"))
+      sidecarRows(t).map { case (path, _, b) =>
+        (if (path.contains("/p=small/")) "small" else "big") -> b.length
+      }.toMap
+    }
+    val derived = perFile(Map("bloomIndexColumns" -> "k"))
+    assert(derived.keySet === Set("small", "big"))
+    assert(derived("small") < 512 && derived("big") > 10000, derived)
+    val explicit = perFile(Map("bloomIndexColumns" -> "k", "bloomIndexExpectedItems" -> "100000"))
+    assert(explicit.values.forall(_ > 100000), explicit)
+  }
+
+  /** Every sidecar row of `t`: (table-relative file, column, filter bytes),
+    * read by Spark's parquet reader. */
+  private def sidecarRows(t: VersionedTable): Seq[(String, String, Array[Byte])] =
+    spark.read.parquet(s"${t.root}/bloom/*.parquet").select("path", "column", "bloom")
+      .as[(String, String, Array[Byte])].collect().toSeq
+
+  private def sidecarFilters(t: VersionedTable): Map[(String, String), BloomFilter] =
+    sidecarRows(t).map { case (p, c, b) =>
+      (p, c) -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))
+    }.toMap
+
+  /** Every row's `xxhash64` of `column` per live data file, from an
+    * independent read back of the committed files grouped by
+    * `input_file_name`. */
+  private def rebuiltHashes(t: VersionedTable, column: String): Map[String, Seq[Long]] = {
+    val files = filesOf(t)
+    val leaf = column.split('.').map(p => s"`$p`").mkString(".")
+    spark.read.parquet(files.map(f => Paths.get(t.root).resolve(f).toString): _*)
+      .selectExpr("input_file_name() AS f", s"xxhash64($leaf) AS h")
+      .as[(String, Long)].collect().toSeq
+      .groupBy { case (f, _) =>
+        val abs = java.net.URI.create(f).getPath
+        files.find(rel => abs.endsWith("/" + rel)).getOrElse(fail(s"$abs is not a live file"))
+      }
+      .map { case (f, hs) => f -> hs.map(_._2) }
+  }
+
+  test("an indexed append runs as many Spark jobs as the same append unindexed") {
+    val base = tmpDir("bloom-append-jobs-")
+    val plain = uniformTable(base + "/plain", indexed = false)
+    val t = uniformTable(base + "/t", indexed = true)
+    val batch = spark.range(8000, 8050).selectExpr("id AS k", "id AS v")
+    // one append each first, so both counted appends run warm
+    plain.append(batch)
+    t.append(batch)
+    val (_, plainJobs) = jobsDuring(plain.append(batch))
+    val (_, indexedJobs) = jobsDuring(t.append(batch))
+    assert(indexedJobs === plainJobs,
+      s"the filters are built inside the write job: $indexedJobs jobs vs $plainJobs unindexed")
+    assert(Files.list(Paths.get(t.root, "bloom")).count() === 3, "one sidecar per commit")
+    assert(t.readByKeys(spark, "k", Seq("8010"))._1.filter("k = 8010").count() === 2)
+  }
+
+  test("every written key of every file is found by its own file's filter") {
+    val cols = Seq("i", "b", "s", "d", "dt", "ts", "meta.media_id")
+    // every column has nulls; `p` is the partition column of the second table
+    val rows = spark.range(0, 2000).selectExpr(
+      "IF(id % 11 = 0, NULL, CAST(id AS INT)) AS i",
+      "IF(id % 13 = 0, NULL, id * 1000003) AS b",
+      "IF(id % 7 = 0, NULL, concat('key-', id)) AS s",
+      "IF(id % 17 = 0, NULL, CAST(id / 8 AS DECIMAL(12, 3))) AS d",
+      "IF(id % 19 = 0, NULL, date_add(DATE'2020-01-01', CAST(id AS INT))) AS dt",
+      "IF(id % 23 = 0, NULL, timestamp_micros(1600000000000000 + id * 1000001)) AS ts",
+      "named_struct('media_id', IF(id % 29 = 0, NULL, id * 37), 'format', 'png') AS meta",
+      "CASE id % 3 WHEN 0 THEN 'a/b' WHEN 1 THEN 'c d' ELSE NULL END AS p")
+    def check(t: VersionedTable, nFiles: Int): Unit = {
+      val files = filesOf(t)
+      assert(files.size === nFiles)
+      val filters = sidecarFilters(t)
+      cols.foreach { c =>
+        val rebuilt = rebuiltHashes(t, c)
+        assert(rebuilt.keySet === files.toSet)
+        rebuilt.foreach { case (f, hs) =>
+          val bf = filters.getOrElse((f, c), fail(s"no filter for ($f, $c)"))
+          assert(hs.forall(bf.mightContainLong), s"a key of $c in $f is not in its filter")
+        }
+        assert(rebuilt.values.flatten.toSet.contains(42L), s"the nulls of $c hash to the seed")
+      }
+      // probes of one written value per column keep that value's file
+      Seq("i" -> "5", "b" -> "5000015", "s" -> "'key-5'", "d" -> "0.625",
+          "dt" -> "DATE'2020-01-06'", "meta.media_id" -> "185").foreach { case (c, lit) =>
+        val key = lit.stripPrefix("DATE").stripPrefix("'").stripSuffix("'")
+        val (df, kept, total) = t.readByKeys(spark, c, Seq(key))
+        assert(kept >= 1 && kept < total, s"$c = $key kept $kept of $total")
+        assert(df.filter(s"$c = $lit").count() === 1, s"$c = $lit")
+      }
+    }
+    val flat = VersionedTable(tmpDir("bloom-types-") + "/t")
+    flat.setProperties(Map("bloomIndexColumns" -> cols.mkString(",")))
+    flat.commit(rows, numPartitions = Some(4))
+    check(flat, 4)
+    // partitioned: paths carry escaped (a%2Fb) and null partition segments;
+    // the partition column is not in the files and gets no filter
+    val parted = VersionedTable(tmpDir("bloom-types-p-") + "/t")
+    parted.setProperties(Map("bloomIndexColumns" -> (cols :+ "p").mkString(",")))
+    parted.commit(rows, numPartitions = Some(2), partitionBy = Seq("p"))
+    check(parted, 3)
+    assert(!sidecarFilters(parted).keys.exists(_._2 == "p"))
+  }
+
+  test("kept files equal an independent rebuild of the filters from the written files") {
+    /** Each file's filter rebuilt from its read-back hashes, sized as the
+      * table sizes it; a file survives iff some key might be in it. */
+    def rebuildProbe(t: VersionedTable, keys: Seq[String],
+        sized: Long => BloomFilter): Seq[String] = {
+      val lits = keys.map(k => s"'$k'").mkString(", ")
+      val hashes = spark.range(1).selectExpr(s"explode(array($lits)) AS __s")
+        .selectExpr("xxhash64(CAST(__s AS BIGINT))").as[Long].collect().toSeq
+      val rebuilt = rebuiltHashes(t, "k").map { case (f, hs) =>
+        val bf = sized(hs.size.toLong)
+        hs.foreach(bf.putLong)
+        f -> bf
+      }
+      filesOf(t).filter(f => rebuilt.get(f).forall(bf => hashes.exists(bf.mightContainLong)))
+    }
+    val explicit = uniformTable(tmpDir("bloom-rebuild-") + "/t", indexed = true)
+    val derived = VersionedTable(tmpDir("bloom-rebuild-d-") + "/t")
+    derived.setProperties(Map("bloomIndexColumns" -> "k"))
+    derived.commit(spark.range(0, 8000).selectExpr("id * 37 % 8000 AS k", "id AS v"),
+      numPartitions = Some(8))
+    Seq(explicit, derived).foreach(
+      _.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2)))
+    Seq[(VersionedTable, Long => BloomFilter)](
+      explicit -> (_ => BloomFilter.create(2000, 0.01)),
+      derived -> (n => BloomFilter.create(n, VersionedTable.DerivedBloomFpp))
+    ).foreach { case (t, sized) =>
+      val files = filesOf(t)
+      val v = t.resolve()
+      probeKeySets.foreach { keys =>
+        assert(t.bloomPruneForPredicate(spark, v, files, s"k IN (${keys.mkString(", ")})") ===
+          rebuildProbe(t, keys, sized), s"${t.root}: keys $keys")
+      }
+    }
+  }
+
+  test("an append leaves its filters in the driver cache: the next lookup reads no sidecar") {
+    val root = tmpDir("bloom-write-through-") + "/t"
+    val t = uniformTable(root, indexed = true)
+    VersionedTable.bloomCache.clear()
+    t.append(spark.range(8000, 8400).selectExpr("id AS k", "id AS v").repartition(2))
+    val first = t.filesOf(0L).map(_.split('/')(1)).toSet
+    val appended = filesOf(t).filterNot(f => first.contains(f.split('/')(1)))
+    val cid = appended.head.split('/')(1)
+    val dir = Paths.get(root, "bloom", s"$cid.parquet").toAbsolutePath.normalize
+    val cached = VersionedTable.fingerprint(dir)
+      .flatMap(VersionedTable.bloomCache.get(dir.toString, _))
+    assert(cached.map(_.filters.keySet) === Some(appended.map(_ -> "k").toSet))
+    // garble the part in place: the directory's fingerprint stays the same,
+    // so only a read of the file could notice
+    val part = dir.resolve("part-00000.parquet")
+    Files.write(part, "not parquet".getBytes("UTF-8"))
+    val ((df, kept, _), jobs) = jobsDuring(t.readByKeys(spark, "k", Seq("8100")))
+    assert(jobs === 0)
+    assert(kept === 1 && df.filter("k = 8100").count() === 1)
+    // the control: with the cache cleared, the same lookup reads the part
+    VersionedTable.bloomCache.clear()
+    intercept[Exception](t.readByKeys(spark, "k", Seq("8100")))
   }
 }

@@ -5,8 +5,11 @@ Usage: python3 tools/compare.py <sfDir> <outDir> [query ...]
 
 Reads each <outDir>/<name> parquet dump written by graft.Verify, runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB with the test
-tables registered as views, sorts columns by name + rows by all values,
-and diffs. Queries without an oracle get a rows-present check (the driver's
+tables registered as views, compares the column names and the classes of
+their DuckDB types (DESCRIBE; see type_class), then sorts columns by name +
+rows by all values and diffs. A dump whose values match but whose column
+types differ (say TIMESTAMP WITH TIME ZONE against the oracle's TIMESTAMP)
+fails. Queries without an oracle get a rows-present check (the gate's
 "weaker rows-only" mode). Exit code 1 if any checked query fails.
 """
 import sys, os, json, glob, math
@@ -25,6 +28,24 @@ def normalize(df):
         return str(v)
     rows = sorted(tuple(cell(v) for v in row) for row in df.itertuples(index=False, name=None))
     return list(df.columns), rows
+
+INTEGER_TYPES = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
+                 "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "UHUGEINT"}
+
+def type_class(t):
+    """The type classes the correctness gate tells apart: integer widths
+    compare equal, and so do DATE and a naive TIMESTAMP; TIMESTAMP WITH TIME
+    ZONE is a class of its own, so a UTC-adjusted timestamp dump fails
+    against the oracle's TIMESTAMP."""
+    if t in INTEGER_TYPES:
+        return "INTEGER"
+    if t == "DATE" or (t.startswith("TIMESTAMP") and "TIME ZONE" not in t):
+        return "TIMESTAMP"
+    return t
+
+def column_types(con, sql):
+    """{column name: DuckDB type} of a query's result, from DESCRIBE."""
+    return {r[0]: r[1] for r in con.execute(f"DESCRIBE {sql}").fetchall()}
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
@@ -64,8 +85,11 @@ def main():
                 failed.append(name)
             continue
         try:
-            got = con.execute(f"SELECT * FROM read_parquet({files!r})").fetch_df()
+            dump_sql = f"SELECT * FROM read_parquet({files!r})"
+            got = con.execute(dump_sql).fetch_df()
             exp = con.execute(oracle[name]).fetch_df()
+            gt = column_types(con, dump_sql)
+            et = column_types(con, oracle[name])
         except Exception as e:
             print(f"FAIL {name}: {e}")
             failed.append(name)
@@ -74,6 +98,11 @@ def main():
         ec, er = normalize(exp)
         if gc != ec:
             print(f"FAIL {name}: columns {gc} != {ec}")
+            failed.append(name)
+        elif any(type_class(gt[c]) != type_class(et[c]) for c in gt):
+            diff = {c: (gt[c], et[c]) for c in sorted(gt)
+                    if type_class(gt[c]) != type_class(et[c])}
+            print(f"FAIL {name}: column types differ (spark, duck): {diff}")
             failed.append(name)
         elif gr != er:
             n = sum(1 for a, b in zip(gr, er) if a != b) + abs(len(gr) - len(er))
