@@ -697,9 +697,38 @@ final class VersionedTable(val root: String,
   /** Column names claimed by scanLive's position bookkeeping. */
   private val Reserved = Set("__rel", "__ri")
 
+  /** Scan exactly the table-relative parquet `files` — the one read path
+    * for files a manifest (or a just-finished write) has already named.
+    * The relation sits on a [[ManifestFileIndex]], so planning lists no
+    * directory and runs no listing job; `schema` (made nullable, as
+    * `DataFrameReader` makes a user schema) spares the footer-inference job,
+    * and only a schema-less read infers from the files. `byId` resolves
+    * columns by parquet field id through [[GraftParquetFileFormat]]. */
+  private[table] def scanFiles(spark: SparkSession, files: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      byId: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val index = new ManifestFileIndex(spark,
+      files.map(f => new org.apache.hadoop.fs.Path(Paths.get(root).resolve(f).toString)))
+    val format = if (byId) new GraftParquetFileFormat else new ParquetFileFormat
+    val dataSchema = schema.getOrElse(
+      format.inferSchema(spark, Map.empty, index.allFiles).getOrElse(
+        throw new IllegalStateException(
+          s"cannot infer a schema from ${files.size} file(s) of $root")))
+    val relation = HadoopFsRelation(index, new org.apache.spark.sql.types.StructType(),
+      dataSchema.toNullable, None, format, Map.empty)(spark)
+    org.apache.spark.sql.graft.PlanShim.ofRows(spark, LogicalRelation(relation))
+  }
+
+  /** Schema of a deletion-vector file: the tombstoned row's table-relative
+    * file and its position in that file. */
+  private val DvSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("file STRING, row_index BIGINT")
+
   /** Union frame of deletion-vector files: (file, row_index) tombstones. */
   private def dvFrame(spark: SparkSession, dvs: Seq[String]): DataFrame =
-    spark.read.parquet(dvs.map(f => Paths.get(root).resolve(f).toString): _*)
+    scanFiles(spark, dvs, Some(DvSchema))
 
   /** Scan `files` with deletion vectors `dvs` applied: rows whose
     * (table-relative file, row index) appear in a DV are filtered out by a
@@ -707,6 +736,11 @@ final class VersionedTable(val root: String,
     * shuffle-free, cost one hashed lookup per scanned row. `keepPos` retains
     * the `__rel`/`__ri` position columns for callers (COW rewrites) that
     * reason about row locations.
+    *
+    * The files are scanned through [[scanFiles]]: the manifest already
+    * names them, so the read lists no directory (no listing job however
+    * many files the version has), and a recorded schema spares the footer
+    * inference.
     *
     * Partitioned tables (`partitionBy` non-empty): data files are hive-laid
     *-out and do NOT store the partition columns; their values come from the
@@ -743,7 +777,6 @@ final class VersionedTable(val root: String,
       schema.map(_.fieldNames.toSeq.filter(s.contains))
         .getOrElse(partitionBy.filter(s.contains))
     }.getOrElse(Nil)
-    val paths = files.map(f => Paths.get(root).resolve(f).toString)
     val dataSchema = schema.map(s =>
       if (filePb.isEmpty) s
       else StructType(s.fields.filterNot(f => filePb.contains(f.name))))
@@ -755,11 +788,7 @@ final class VersionedTable(val root: String,
     // conf, which merely reading a table must not mutate).
     val byId = dataSchema.exists(_.fields.exists(
       _.metadata.contains(VersionedTable.FieldIdKey)))
-    val base = dataSchema.map { s =>
-      val r = spark.read.schema(s)
-      if (byId) r.format(classOf[GraftParquetFileFormat].getName).load(paths: _*)
-      else r.parquet(paths: _*)
-    }.getOrElse(spark.read.parquet(paths: _*))
+    val base = scanFiles(spark, files, dataSchema, byId)
     if (dvs.isEmpty && !keepPos && filePb.isEmpty) return base
     val withPos = base.select(col("*"),
       relOfPathCol(uriDecodeCol(col("_metadata.file_path"))).as("__rel"),
@@ -1364,9 +1393,16 @@ final class VersionedTable(val root: String,
     * `bloomIndexExpectedItems` sizes every filter instead (`bloomIndexFpp`
     * default 0.01). The driver then writes the committed files' filters as
     * the commit's sidecar ([[bloomSidecarPath]]) with parquet-mr and puts
-    * them, decoded, into [[VersionedTable.bloomCache]]. */
+    * them, decoded, into [[VersionedTable.bloomCache]].
+    *
+    * `gate` (constraint name → SQL boolean expression: CHECK constraints
+    * and [[notNullChecks]]) is checked inside the same job: its per-
+    * constraint rejected-row counts are observed on the rows being written,
+    * and a positive count raises [[ConstraintViolationException]] after the
+    * write, before anything is published. */
   private def writeDataFiles(df: DataFrame, numPartitions: Option[Int],
-      sortBy: Seq[String], partitionBy: Seq[String] = Nil)
+      sortBy: Seq[String], partitionBy: Seq[String] = Nil,
+      gate: Map[String, String] = Map.empty)
       : (String, Seq[String], Map[String, Map[String, Option[String]]],
          Option[Map[String, Long]]) = {
     // __rel/__ri are scanLive's row-position helper columns; a user column
@@ -1384,7 +1420,16 @@ final class VersionedTable(val root: String,
     Files.createDirectories(dataDir)
     val commitId = java.util.UUID.randomUUID().toString
     val outDir = dataDir.resolve(commitId)
-    val (stamped, stampedIds) = stampFieldIds(df)
+    val (stamped0, stampedIds) = stampFieldIds(df)
+    // the gate's rejected-row counts ride the write as an Observation over
+    // the input rows (partition columns included), so checking the batch
+    // costs no second job and no re-execution of its plan. It observes the
+    // id-stamped frame: a projection stacked on the observation can lose
+    // its alias metadata in the optimizer, and the field ids with it
+    val (gateOrder, gateCounts) = gateAggs(gate)
+    val gateObs = Option.when(gate.nonEmpty)(org.apache.spark.sql.Observation())
+    val stamped = gateObs.fold(stamped0)(o =>
+      stamped0.observe(o, gateCounts.head, gateCounts.tail: _*))
     val out = (numPartitions, sortBy) match {
       case (Some(n), s) if s.nonEmpty =>
         stamped.repartitionByRange(n, s.map(col): _*).sortWithinPartitions(s.map(col): _*)
@@ -1458,6 +1503,13 @@ final class VersionedTable(val root: String,
         }
       walk(outDir, Nil, Map.empty)
       (found.map(_._1).sorted.toSeq, found.toMap)
+    }
+    // no file, no row: nothing to reject. A rejected batch publishes no
+    // version; its files are left for vacuum's orphan sweep.
+    gateObs.filter(_ => files.nonEmpty).foreach { obs =>
+      val counts = obs.get
+      raiseViolations(gateOrder, i =>
+        Option(counts(s"__gate_$i")).fold(0L)(_.asInstanceOf[Long]))
     }
     bloom.foreach { t =>
       val rows = t.entries.map { case (rel, c, b) => (s"data/$commitId/$rel", c, b) }
@@ -1773,8 +1825,7 @@ final class VersionedTable(val root: String,
     if (files.isEmpty) return Map.empty
     // an explicit schema (footer mode's residual float pass) spares the
     // reader its footer-inference job AND column-prunes the scan
-    val written = readSchema.foldLeft(spark.read)((r, s) => r.schema(s)).parquet(
-      files.map(f => Paths.get(root).resolve(f).toString): _*)
+    val written = scanFiles(spark, files, readSchema)
     // kind drives the prune-time comparison: "num" compares numerically,
     // everything else lexicographically (ISO-rendered timestamps/dates sort
     // correctly as strings)
@@ -1882,14 +1933,6 @@ final class VersionedTable(val root: String,
     }.toMap
   }
 
-  /** Count rows of `files` violating each of `constraints` in ONE scan of
-    * exactly those files (the freshly written batch, never the table) and
-    * raise [[ConstraintViolationException]] naming every violated constraint
-    * if any row fails. Delta's CHECK semantics: a row passes only when the
-    * expression evaluates to TRUE — NULL is a violation (a quality gate that
-    * waves nulls through is a hole, not a gate). Called between data-file
-    * write and manifest publish, so a rejected batch is never visible; its
-    * orphaned files are swept by [[vacuum]]. */
   /** Implicit write-gate checks from schema nullability (Delta's NOT NULL
     * enforcement): one `IS NOT NULL` per non-nullable field, validated
     * through the same gate CHECK constraints use but NEVER persisted to
@@ -1900,14 +1943,22 @@ final class VersionedTable(val root: String,
     schema.toSeq.flatMap(_.fields.filterNot(_.nullable).map(f =>
       s"NOT NULL `${f.name}`" -> s"`${f.name}` IS NOT NULL")).toMap
 
+  /** Count rows of `files` violating each of `constraints` in ONE scan of
+    * exactly those files (the freshly written batch, never the table) and
+    * raise [[ConstraintViolationException]] naming every violated constraint
+    * if any row fails. Delta's CHECK semantics: a row passes only when the
+    * expression evaluates to TRUE — NULL is a violation (a quality gate that
+    * waves nulls through is a hole, not a gate). Writers pass their gate to
+    * [[writeDataFiles]], which checks it inside the write job; this scan
+    * serves only constraints a write could not see (added to the head
+    * while it ran), between data-file write and manifest publish, so a
+    * rejected batch is never visible; its orphaned files are swept by
+    * [[vacuum]]. */
   private def validateWritten(spark: SparkSession, files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       constraints: Map[String, String]): Unit = {
     if (constraints.isEmpty || files.isEmpty) return
-    val paths = files.map(f => Paths.get(root).resolve(f).toString)
-    val df = schema.map(s => spark.read.schema(s).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
-    validateFrame(df, constraints)
+    validateFrame(scanFiles(spark, files, schema), constraints)
   }
 
   /** Frame-variant of [[validateWritten]] for callers whose live rows are
@@ -1915,14 +1966,28 @@ final class VersionedTable(val root: String,
     * already-deleted rows must not be able to reject an ALTER). */
   private def validateFrame(df: DataFrame, constraints: Map[String, String]): Unit = {
     if (constraints.isEmpty) return
+    val (ordered, aggs) = gateAggs(constraints)
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    raiseViolations(ordered, i => if (row.isNullAt(i)) 0L else row.getLong(i))
+  }
+
+  /** The gate's constraints in a fixed order, and per constraint one
+    * aggregate counting the rows it rejects (named `__gate_<i>`): the
+    * aggregation [[validateFrame]] runs as a query and [[writeDataFiles]]
+    * observes on the rows it writes. */
+  private def gateAggs(constraints: Map[String, String])
+      : (Seq[(String, String)], Seq[Column]) = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
     val ordered = constraints.toSeq.sortBy(_._1)
-    val aggs = ordered.map { case (n, e) =>
-      sum(when(coalesce(expr(e), lit(false)), 0L).otherwise(1L)).as(n) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    (ordered, ordered.zipWithIndex.map { case ((_, e), i) =>
+      sum(when(coalesce(expr(e), lit(false)), 0L).otherwise(1L)).as(s"__gate_$i") })
+  }
+
+  /** Raise [[ConstraintViolationException]] naming every constraint of
+    * `ordered` whose rejected-row count (`rejected(i)`) is positive. */
+  private def raiseViolations(ordered: Seq[(String, String)], rejected: Int => Long): Unit = {
     val violated = ordered.zipWithIndex.collect {
-      case ((n, e), i) if !row.isNullAt(i) && row.getLong(i) > 0 =>
-        s"$n ('$e'): ${row.getLong(i)} row(s)"
+      case ((n, e), i) if rejected(i) > 0 => s"$n ('$e'): ${rejected(i)} row(s)"
     }
     if (violated.nonEmpty) throw new ConstraintViolationException(
       s"CHECK constraint violation writing to $root — ${violated.mkString("; ")}")
@@ -2304,8 +2369,7 @@ final class VersionedTable(val root: String,
           if (dvAdded.nonEmpty) {
             val spark = org.apache.spark.sql.SparkSession.getActiveSession
               .getOrElse(return false)
-            val covered = spark.read.parquet(
-                dvAdded.map(f => Paths.get(root).resolve(f).toString): _*)
+            val covered = dvFrame(spark, dvAdded)
               .select("file").distinct().collect().map(_.getString(0)).toSet
             // their tombstones on a file we remove would be lost by our
             // rewrite; on a file we tombstone too, the serial orders
@@ -2456,23 +2520,28 @@ final class VersionedTable(val root: String,
         if (fn == n) col(fn).as(fn, md) else col(fn)
       }.toSeq: _*)
     }
-    val (commitId, files, partVals, stamped) = writeDataFiles(df0, numPartitions, sortBy, partitionBy)
+    // CHECK constraints survive an overwrite (they describe the table, not a
+    // snapshot) and gate the incoming batch: the write checks the current
+    // head's gate in its own job
+    val gateOf = (base: Option[Long]) =>
+      base.map(constraintsOf).getOrElse(Map.empty) ++ notNullChecks(Some(df0.schema))
+    val observedGate = gateOf(latestVersion())
+    val (commitId, files, partVals, stamped) =
+      writeDataFiles(df0, numPartitions, sortBy, partitionBy, observedGate)
     val partTypes = df0.schema.fields.map(f => f.name -> f.dataType).toMap
     val stats =
       if (collectStats && files.nonEmpty)
         collectFileStats(df0.sparkSession, commitId, files, partVals, partTypes)
       else Map.empty[String, Map[String, (String, String, String)]]
-    // CHECK constraints survive an overwrite (they describe the table, not a
-    // snapshot) and gate the incoming batch; validated per attempt so a retry
-    // against a head whose constraints just changed re-checks honestly
+    // a retry against a head whose constraints just changed re-checks the
+    // constraints the write did not see. Partitioned files don't store the
+    // partition columns, so a constraint referencing one would see nulls in
+    // a file scan — there the input frame is validated (same rows, pre-layout)
     retryPublish { base =>
       val cs = base.map(constraintsOf).getOrElse(Map.empty)
-      // partitioned files don't store the partition columns, so a constraint
-      // referencing one would see nulls in a file scan — validate the input
-      // frame instead (same rows, pre-layout)
-      val gate = cs ++ notNullChecks(Some(df0.schema))
-      if (partitionBy.isEmpty) validateWritten(df0.sparkSession, files, Some(df0.schema), gate)
-      else validateFrame(df0, gate)
+      val pending = gateOf(base).filterNot { case (n, e) => observedGate.get(n).contains(e) }
+      if (partitionBy.isEmpty) validateWritten(df0.sparkSession, files, Some(df0.schema), pending)
+      else validateFrame(df0, pending)
       publish(files, df0.schema.json, stats, txn, base, cs,
         partitionBy = partitionBy, partitions = partVals, stampedIds = stamped,
         operation = Some("OVERWRITE"), identityClear = resetIdentity)
@@ -2492,16 +2561,14 @@ final class VersionedTable(val root: String,
       collectStats: Boolean = true, txn: Option[(String, Long)] = None,
       partitionBy: Seq[String] = Nil): Long = {
     requireStatsForIdentity(collectStats, "Pinned commit")
-    val (commitId, files, partVals, stamped) = writeDataFiles(df, numPartitions, sortBy, partitionBy)
+    val cs = base.map(constraintsOf).getOrElse(Map.empty)
+    val (commitId, files, partVals, stamped) = writeDataFiles(df, numPartitions, sortBy,
+      partitionBy, gate = cs ++ notNullChecks(Some(df.schema)))
     val partTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val stats =
       if (collectStats && files.nonEmpty)
         collectFileStats(df.sparkSession, commitId, files, partVals, partTypes)
       else Map.empty[String, Map[String, (String, String, String)]]
-    val cs = base.map(constraintsOf).getOrElse(Map.empty)
-    val gate = cs ++ notNullChecks(Some(df.schema))
-    if (partitionBy.isEmpty) validateWritten(df.sparkSession, files, Some(df.schema), gate)
-    else validateFrame(df, gate)
     publish(files, df.schema.json, stats, txn, base, cs,
       partitionBy = partitionBy, partitions = partVals, stampedIds = stamped,
       operation = Some("OVERWRITE"))
@@ -2541,14 +2608,23 @@ final class VersionedTable(val root: String,
     // A benign race: if the head changes between this read and the publish,
     // the retry below re-validates against the new head; the layout check
     // there refuses a partitioning mismatch.
-    val tablePb = latestVersion().map(partitionByOf).getOrElse(Nil)
+    val head = latestVersion()
+    val tablePb = head.map(partitionByOf).getOrElse(Nil)
+    val headSchema = head.flatMap(schemaOf)
     // generated columns recompute from the recorded schema: the batch may
     // omit them, a supplied value is overwritten (provable consistency);
     // omitted DEFAULT columns fill first (a default never feeds a
     // generated expression's source, but the symmetric order is harmless)
-    val df = latestVersion().flatMap(schemaOf)
-      .map(s => applyGenerated(applyDefaults(df0, s), s)).getOrElse(df0)
-    val (commitId, files, partVals, stamped) = writeDataFiles(df, numPartitions, sortBy, tablePb)
+    val df = headSchema.map(s => applyGenerated(applyDefaults(df0, s), s)).getOrElse(df0)
+    // the head's write gate is checked by the write job itself. A batch
+    // missing a table column is refused at publish below, so it carries no
+    // gate here (its expressions could not resolve against the batch)
+    val observedGate: Map[String, String] = (for {
+      v <- head
+      prior <- headSchema if prior.fieldNames.forall(df.columns.contains)
+    } yield constraintsOf(v) ++ notNullChecks(Some(prior))).getOrElse(Map.empty)
+    val (commitId, files, partVals, stamped) =
+      writeDataFiles(df, numPartitions, sortBy, tablePb, observedGate)
     val partTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val stats =
       if (collectStats && files.nonEmpty)
@@ -2646,12 +2722,15 @@ final class VersionedTable(val root: String,
           prior.fields.map(p => p.copy(dataType =
             mergedByName.getOrElse(p.name, p.dataType))) ++ added)
         val cs = constraintsOf(v)
-        // only the incoming batch is scanned: carried-forward files already
+        // only the incoming batch is checked: carried-forward files already
         // passed their own write-time gate (and addConstraint re-proved them);
-        // NOT NULL gates come from the TABLE's recorded nullability
-        val gate = cs ++ notNullChecks(Some(prior))
-        if (tablePb.isEmpty) validateWritten(df.sparkSession, files, Some(df.schema), gate)
-        else validateFrame(df, gate)
+        // NOT NULL gates come from the TABLE's recorded nullability. The
+        // write observed the gate of the head it started from; only checks
+        // that head lacked (added concurrently) cost a scan here
+        val pending = (cs ++ notNullChecks(Some(prior))).filterNot { case (n, e) =>
+          observedGate.get(n).contains(e) }
+        if (tablePb.isEmpty) validateWritten(df.sparkSession, files, Some(df.schema), pending)
+        else validateFrame(df, pending)
         // deletion vectors ride along unchanged: an append touches no
         // existing file, so no tombstone can be affected
         publish(filesOf(v) ++ files, union.json, statsOf(v) ++ stats, txn, Some(v), cs,
@@ -3396,8 +3475,7 @@ final class VersionedTable(val root: String,
             .select(col("__rel").as("file"), col("__ri").as("row_index")))
         val counts =
           if (files.isEmpty) Map.empty[String, Long]
-          else spark.read.parquet(
-              files.map(f => Paths.get(root).resolve(f).toString): _*)
+          else dvFrame(spark, files)
             .groupBy("file").count()
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
             .filter { case (f, _) => allSet.contains(f) }
@@ -3414,8 +3492,7 @@ final class VersionedTable(val root: String,
     val newDv =
       if (scanDrops.isEmpty || allDv.isEmpty) allDv
       else {
-        val rd = spark.read.parquet(
-          allDv.map(f => Paths.get(root).resolve(f).toString): _*)
+        val rd = dvFrame(spark, allDv)
         val kept = rd.filter(org.apache.spark.sql.functions.not(
           col("file").isin(scanDrops: _*)))
         if (kept.isEmpty) Nil else writeDvFiles(kept)
@@ -3526,7 +3603,10 @@ final class VersionedTable(val root: String,
           case None => col(f.name)
         }
       }.toSeq: _*)
-    val (commitId, newFiles, newPartVals, stamped) = writeDataFiles(rewritten, None, Nil, pb)
+    // SET expressions can push a row out of bounds: the write gates the
+    // rewritten rows
+    val (commitId, newFiles, newPartVals, stamped) = writeDataFiles(rewritten, None, Nil, pb,
+      gate = constraintsOf(v) ++ notNullChecks(Some(schema)))
     // write-time CDF (iff enabled): per-row preimage+postimage pairs from
     // ONE more predicate-pushed scan of the matching rows (no bag-diff
     // shuffles — the exceptAll formulation hashed the whole touched slice
@@ -3556,10 +3636,6 @@ final class VersionedTable(val root: String,
     val stats = if (newFiles.nonEmpty)
                   collectFileStats(spark, commitId, newFiles, newPartVals, partTypes)
                 else Map.empty[String, Map[String, (String, String, String)]]
-    val cs = constraintsOf(v) ++ notNullChecks(Some(schema))
-    // SET expressions can push a row out of bounds: gate the rewritten files
-    if (pb.isEmpty) validateWritten(spark, newFiles, Some(schema), cs)
-    else validateFrame(rewritten, cs)
     // append rebase as in delete: fresh files with no predicate-matching
     // rows fold in (a serial update would have left them untouched)
     (publishRewrite(v, touched.toSet, newFiles, stats, schema.json,
@@ -3676,7 +3752,10 @@ final class VersionedTable(val root: String,
       else marked
         .filter(col("__change_kind").isNull || col("__change_kind") =!= "delete")
         .drop("__change_kind", "__pre")
-    val (commitId, newFiles, newPartVals, stamped) = writeDataFiles(merged, numPartitions, sortBy, pb)
+    // inserted + updated rows land in the new files: the write gates exactly
+    // those, in its own job
+    val (commitId, newFiles, newPartVals, stamped) = writeDataFiles(merged, numPartitions,
+      sortBy, pb, gate = constraintsOf(v) ++ notNullChecks(Some(schema)))
     // write-time CDF (iff enabled) from the kernel's OWN change markers —
     // one more execution of the merge join, zero bag-diff shuffles (the
     // exceptAll formulation hashed the whole touched slice twice): updates
@@ -3687,10 +3766,6 @@ final class VersionedTable(val root: String,
     val newStats = if (newFiles.nonEmpty)
                      collectFileStats(spark, commitId, newFiles, newPartVals, partTypes)
                    else Map.empty[String, Map[String, (String, String, String)]]
-    val cs = constraintsOf(v) ++ notNullChecks(Some(schema))
-    // inserted + updated rows land in the new files: gate exactly those
-    if (pb.isEmpty) validateWritten(spark, newFiles, Some(schema), cs)
-    else validateFrame(merged, cs)
     // append rebase: fresh files whose targetKey range is disjoint from the
     // source's key range cannot match any merge clause, so serial
     // merge-after-append would have carried them verbatim — fold them in;
@@ -3927,8 +4002,7 @@ final class VersionedTable(val root: String,
       .select(col("__rel").as("file"), col("__ri").as("row_index")))
     val morDvRead =
       if (newDv.isEmpty) None
-      else Some(spark.read.parquet(
-        newDv.map(f => Paths.get(root).resolve(f).toString): _*))
+      else Some(dvFrame(spark, newDv))
     val nTomb = morDvRead.fold(0L)(_.count())
     val morDvCovered = morDvRead.filter(_ => nTomb > 0L).fold(Set.empty[String])(
       _.select("file").distinct().collect().map(_.getString(0)).toSet)
@@ -3940,7 +4014,7 @@ final class VersionedTable(val root: String,
     val (commitId, newFiles, newPartVals, stamped) = writeDataFiles(
       appendRows.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n")),
-      numPartitions, sortBy, pb)
+      numPartitions, sortBy, pb, gate = constraintsOf(v) ++ notNullChecks(Some(schema)))
     val nAppended = if (newFiles.isEmpty) 0L else obs.get("n").asInstanceOf[Long]
     // provable no-op (e.g. a re-delivered batch: all identity updates, all
     // inserts already present): don't burn a version. The writer may have
@@ -3956,9 +4030,6 @@ final class VersionedTable(val root: String,
     val newStats = if (newFiles.nonEmpty)
                      collectFileStats(spark, commitId, newFiles, newPartVals, partTypes)
                    else Map.empty[String, Map[String, (String, String, String)]]
-    val cs = constraintsOf(v) ++ notNullChecks(Some(schema))
-    if (pb.isEmpty) validateWritten(spark, newFiles, Some(schema), cs)
-    else validateFrame(appendRows, cs)
     // no file is dropped (touched = empty set): carried stats stay sound —
     // a DV only narrows live rows, min/max remain valid skip bounds
     (publishRewrite(v, Set.empty, newFiles, newStats, schema.json,
@@ -4191,7 +4262,7 @@ final class VersionedTable(val root: String,
         case Some(s) =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
         case None =>
-          spark.read.parquet(all.map(f => Paths.get(root).resolve(f).toString): _*).limit(0)
+          scanFiles(spark, all, None).limit(0)
       }
     (df, kept.size, all.size)
   }
@@ -5016,7 +5087,7 @@ final class VersionedTable(val root: String,
         if (fs.isEmpty)
           throw new IllegalStateException(
             s"version $v of $root claims stored CDF but lists no cdf files")
-        spark.read.parquet(fs.map(f => Paths.get(root).resolve(f).toString): _*)
+        scanFiles(spark, fs, None)
       case _ => changes(spark, prev, v)
     }
   }
@@ -5217,14 +5288,12 @@ final class VersionedTable(val root: String,
           pinned.filter(col(cName).isNotNull)
             .select(schema.fields.map(f => col(f.name)).toSeq: _*))
         val pb = partitionByOf(v)
-        val (commitId, files, partVals, stamped) = writeDataFiles(withId, None, Nil, pb)
+        val (commitId, files, partVals, stamped) = writeDataFiles(withId, None, Nil, pb,
+          gate = constraintsOf(v) ++ notNullChecks(Some(schema)))
         val partTypes = schema.fields.map(f => f.name -> f.dataType).toMap
         val stats = if (files.nonEmpty)
           collectFileStats(spark, commitId, files, partVals, partTypes)
         else Map.empty[String, Map[String, (String, String, String)]]
-        val gate = constraintsOf(v) ++ notNullChecks(Some(schema))
-        if (pb.isEmpty) validateWritten(spark, files, Some(schema), gate)
-        else validateFrame(withId, gate)
         try {
           val published = publish(filesOf(v) ++ files, schema.json, statsOf(v) ++ stats,
             None, Some(v), constraintsOf(v), dvs = dvsOf(v), partitionBy = pb,
@@ -5475,14 +5544,12 @@ final class VersionedTable(val root: String,
             "appendIdentity for allocation")
       }
       val pb = partitionByOf(v)
-      val (commitId, files, partVals, stamped) = writeDataFiles(batch, None, Nil, pb)
+      val (commitId, files, partVals, stamped) = writeDataFiles(batch, None, Nil, pb,
+        gate = constraintsOf(v) ++ notNullChecks(Some(schema)))
       val partTypes = schema.fields.map(f => f.name -> f.dataType).toMap
       val stats = if (files.nonEmpty)
         collectFileStats(spark, commitId, files, partVals, partTypes)
       else Map.empty[String, Map[String, (String, String, String)]]
-      val gate = constraintsOf(v) ++ notNullChecks(Some(schema))
-      if (pb.isEmpty) validateWritten(spark, files, Some(schema), gate)
-      else validateFrame(batch, gate)
       try {
         val published = publish(filesOf(v) ++ files, schema.json, statsOf(v) ++ stats,
           None, Some(v), constraintsOf(v), dvs = dvsOf(v), partitionBy = pb,

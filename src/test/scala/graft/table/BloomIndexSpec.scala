@@ -1,7 +1,6 @@
 package graft.table
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * whose values are uniform across files — every file's [min, max] spans
   * the whole domain, so range pruning keeps everything; the Bloom filter
   * knows which file actually holds a key. */
-class BloomIndexSpec extends AnyFunSuite with SparkSpec {
+class BloomIndexSpec extends AnyFunSuite with SparkSpec with JobCensus {
   import spark.implicits._
 
   /** 8 files, each a round-robin (uniform) sample of the key domain:
@@ -242,33 +241,6 @@ class BloomIndexSpec extends AnyFunSuite with SparkSpec {
 
   private def filesOf(t: VersionedTable): Seq[String] =
     t.filesOf(t.resolve())
-
-  /** Spark jobs started while `body` runs. The listener bus is
-    * asynchronous, so a sentinel job in its own group closes the window:
-    * its start event arrives after every event `body` caused. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == s"$tag-sentinel" => sentinelSeen.countDown()
-          case Some(g) if g == tag => counted.incrementAndGet()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(tag, "probe")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-sentinel", "sentinel")
-      try spark.range(1).rdd.count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, counted.get())
-    } finally sc.removeSparkListener(l)
-  }
 
   /** The Spark-side probe this suite's driver probe replaced, as an
     * independent oracle: key hashes from a Spark job over the literal
